@@ -7,7 +7,7 @@ reference citation. Everything is overridable per-call.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -27,18 +27,10 @@ class EngineConfig:
     # case-insensitive on read (HBaseTransLink.java:76 uses equalsIgnoreCase).
     status_genuine: str = "GENUINE"
     status_fraud: str = "FRAUD"
-    genuine_aliases: tuple[str, ...] = ("GENUINE",)
 
     # Null policy (SURVEY.md 1.4(7)): a NULL rule input means that rule
     # cannot prove fraud -> it passes; dt <= 0 makes the speed rule fire.
-    null_rule_passes: bool = True
     nonpositive_dt_is_fraud: bool = True
-
-    # Geo (FraudDistMetric.java:74-76): spherical law of cosines, R km.
-    earth_radius_km: float = 6371.0
-
-    # Streaming (FinFraudGuard.java:41).
-    trigger_interval: str = "1 second"
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -20,6 +20,10 @@ Determinism discipline (SURVEY.md 5):
 
 from __future__ import annotations
 
+import importlib
+import os
+import pkgutil
+import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -66,291 +70,16 @@ def register(name: str, sql: Optional[str], tags: tuple[str, ...] = ()):
     return deco
 
 
-def registry() -> list[Query]:
-    # Import side-effect modules that register additional queries.
-    from fraud_detection_in_banking_transactions_using_hadoop_spark import (  # noqa: F401
-        queries_dq,
-        queries_embed,
-        queries_ext,
-        queries_ext2,
-        queries_ext3,
-        queries_ext4,
-        queries_ext5,
-        queries_ext6,
-        queries_ext7,
-        queries_ext8,
-        queries_ext9,
-        queries_ext10,
-        queries_ext11,
-        queries_ext12,
-        queries_ext13,
-        queries_ext14,
-        queries_ext15,
-        queries_ext16,
-        queries_ext17,
-        queries_ext18,
-        queries_ext19,
-        queries_ext20,
-        queries_ext21,
-        queries_ext22,
-        queries_ext23,
-        queries_ext24,
-        queries_ext25,
-        queries_ext26,
-        queries_ext27,
-        queries_ext28,
-        queries_ext29,
-        queries_ext30,
-        queries_ext31,
-        queries_ext32,
-        queries_ext33,
-        queries_ext34,
-        queries_ext35,
-        queries_ext36,
-        queries_ext37,
-        queries_ext38,
-        queries_ext39,
-        queries_ext40,
-        queries_ext41,
-        queries_ext42,
-        queries_ext43,
-        queries_ext44,
-        queries_ext45,
-        queries_ext46,
-        queries_ext47,
-        queries_ext48,
-        queries_ext49,
-        queries_ext50,
-        queries_ext51,
-        queries_ext52,
-        queries_ext53,
-        queries_ext54,
-        queries_ext55,
-        queries_ext56,
-        queries_ext57,
-        queries_ext58,
-        queries_ext59,
-        queries_ext60,
-        queries_ext61,
-        queries_ext62,
-        queries_ext63,
-        queries_ext64,
-        queries_ext65,
-        queries_ext66,
-        queries_ext67,
-        queries_ext68,
-        queries_ext69,
-        queries_ext70,
-        queries_ext71,
-        queries_ext72,
-        queries_ext73,
-        queries_ext74,
-        queries_ext75,
-        queries_ext76,
-        queries_ext77,
-        queries_ext78,
-        queries_ext79,
-        queries_ext80,
-        queries_ext81,
-        queries_ext82,
-        queries_ext83,
-        queries_ext84,
-        queries_ext85,
-        queries_ext86,
-        queries_ext87,
-        queries_ext88,
-        queries_ext89,
-        queries_ext90,
-        queries_ext91,
-        queries_ext92,
-        queries_ext93,
-        queries_ext94,
-        queries_ext95,
-        queries_ext96,
-        queries_ext97,
-        queries_ext98,
-        queries_ext99,
-        queries_ext100,
-        queries_ext101,
-        queries_ext102,
-        queries_ext103,
-        queries_ext104,
-        queries_ext105,
-        queries_ext106,
-        queries_ext107,
-        queries_ext108,
-        queries_ext109,
-        queries_ext110,
-        queries_ext111,
-        queries_ext112,
-        queries_ext113,
-        queries_ext114,
-        queries_ext115,
-        queries_ext116,
-        queries_ext117,
-        queries_ext118,
-        queries_ext119,
-        queries_ext120,
-        queries_ext121,
-        queries_ext122,
-        queries_ext123,
-        queries_ext124,
-        queries_ext125,
-        queries_ext126,
-        queries_ext127,
-        queries_ext128,
-        queries_ext129,
-        queries_ext130,
-        queries_ext131,
-        queries_ext132,
-        queries_ext133,
-        queries_ext134,
-        queries_ext135,
-        queries_ext136,
-        queries_ext137,
-        queries_ext138,
-        queries_ext139,
-        queries_ext140,
-        queries_ext141,
-        queries_ext142,
-        queries_ext143,
-        queries_ext144,
-        queries_ext145,
-        queries_ext146,
-        queries_ext147,
-        queries_ext148,
-        queries_ext149,
-        queries_ext150,
-        queries_ext151,
-        queries_ext152,
-        queries_ext153,
-        queries_ext154,
-        queries_ext155,
-        queries_ext156,
-        queries_ext157,
-        queries_ext158,
-        queries_ext159,
-        queries_ext160,
-        queries_ext161,
-        queries_ext162,
-        queries_ext163,
-        queries_ext164,
-        queries_ext165,
-        queries_ext166,
-        queries_ext167,
-        queries_ext168,
-        queries_ext169,
-        queries_ext170,
-        queries_ext171,
-        queries_ext172,
-        queries_ext173,
-        queries_ext174,
-        queries_ext175,
-        queries_ext176,
-        queries_ext177,
-        queries_ext178,
-        queries_ext179,
-        queries_ext180,
-        queries_ext181,
-        queries_ext182,
-        queries_ext183,
-        queries_ext184,
-        queries_ext185,
-        queries_ext186,
-        queries_ext187,
-        queries_ext188,
-        queries_ext189,
-        queries_ext190,
-        queries_ext191,
-        queries_ext192,
-        queries_ext193,
-        queries_ext194,
-        queries_ext195,
-        queries_ext196,
-        queries_ext197,
-        queries_ext198,
-        queries_ext199,
-        queries_ext200,
-        queries_ext201,
-        queries_ext202,
-        queries_ext203,
-        queries_ext204,
-        queries_ext205,
-        queries_ext206,
-        queries_ext207,
-        queries_ext208,
-        queries_ext209,
-        queries_ext210,
-        queries_ext211,
-        queries_ext212,
-        queries_ext213,
-        queries_ext214,
-        queries_ext215,
-        queries_ext216,
-        queries_ext217,
-        queries_ext218,
-        queries_ext219,
-        queries_ext220,
-        queries_ext221,
-        queries_ext222,
-        queries_ext223,
-        queries_ext224,
-        queries_ext225,
-        queries_ext226,
-        queries_ext227,
-        queries_ext228,
-        queries_ext229,
-        queries_ext230,
-        queries_ext231,
-        queries_ext232,
-        queries_ext233,
-        queries_ext234,
-        queries_ext235,
-        queries_ext236,
-        queries_ext237,
-        queries_ext238,
-        queries_ext239,
-        queries_ext240,
-        queries_ext241,
-        queries_ext242,
-        queries_ext243,
-        queries_ext244,
-        queries_ext245,
-        queries_ext246,
-        queries_ext247,
-        queries_ext248,
-        queries_ext249,
-        queries_ext250,
-        queries_ext251,
-        queries_ext252,
-        queries_ext253,
-        queries_ext254,
-        queries_ext255,
-        queries_ext256,
-        queries_ext257,
-        queries_ext258,
-        queries_ext259,
-        queries_ext260,
-        queries_ext261,
-        queries_ext262,
-        queries_ext263,
-        queries_ext264,
-        queries_ext265,
-        queries_ext266,
-        queries_feat,
-        queries_funcs,
-        queries_funcs2,
-        queries_graph,
-        queries_llm,
-        queries_llm2,
-        queries_modern,
-        queries_pipeline,
-        queries_pipeline2,
-        queries_tpch,
-        queries_tpch2,
-        queries_tpch3,
-    )
+def _natural_key(name: str) -> list:
+    return [int(t) if t.isdigit() else t for t in re.split(r"(\d+)", name)]
 
+
+def registry() -> list[Query]:
+    # Importing a queries_* module registers its queries. Natural-sort
+    # order (ext2 before ext10) keeps the registration order stable.
+    names = (m.name for m in pkgutil.iter_modules([os.path.dirname(__file__)]))
+    for name in sorted((n for n in names if n.startswith("queries_")), key=_natural_key):
+        importlib.import_module(f"{__package__}.{name}")
     return list(_REGISTRY)
 
 

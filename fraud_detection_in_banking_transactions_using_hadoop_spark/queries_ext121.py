@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext120 import _daily_spark
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _K = 7  # treatments: weekdays
@@ -269,7 +270,7 @@ def q_tail_dependence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation can't see -- whether EXTREME days co-occur -- and the
     max-rank transform keeps every comparison an exact integer
     (10*R vs 9*(n+1)), tie-stable without tiebreaks."""
-    daily = _daily(spark, sf_dir)
+    daily = _daily_spark(spark, sf_dir)
     a, b = daily.alias("a"), daily.alias("b")
     ranked = (
         a.crossJoin(F.broadcast(b))
@@ -308,11 +309,3 @@ def q_tail_dependence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    return orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x"),
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("y"),
-    )

@@ -26,27 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext120 import (
+    _DAILY_CTE,
+    _daily_spark,
+)
 
 _DEC = "decimal(38,0)"
-
-_DAILY_CTE = """
-    daily AS (
-      SELECT o_orderdate AS d,
-             CAST(count(*) AS BIGINT) AS x,
-             CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-               AS y
-      FROM orders GROUP BY o_orderdate)"""
-
-
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    return orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x"),
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("y"),
-    )
 
 
 @register(
@@ -104,7 +89,7 @@ def q_distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     dCor = 0 iff independent -- the property Pearson lacks. One daily
     pair join produces per-row |diff| sums; every S term is an exact
     integer before the close."""
-    daily = _daily(spark, sf_dir)
+    daily = _daily_spark(spark, sf_dir)
     a, b = daily.alias("a"), daily.alias("b")
     dx = F.abs(F.col("a.x") - F.col("b.x"))
     dy = F.abs(F.col("a.y") - F.col("b.y"))
@@ -210,7 +195,7 @@ def q_partial_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson r's close over exact integer moments; the identity then
     answers 'is count~revenue co-movement just the AOV channel?' --
     the one-confounder screen before any regression."""
-    daily = _daily(spark, sf_dir)
+    daily = _daily_spark(spark, sf_dir)
     t = daily.select(
         "x", "y", F.expr("CAST(y DIV x AS BIGINT)").alias("z")
     )
@@ -303,7 +288,7 @@ def q_ewm_corr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight identically in both engines) and the weighted Pearson
     closes in one expression. The recency-weighted answer to 'are
     count and revenue still moving together NOW?'."""
-    daily = _daily(spark, sf_dir)
+    daily = _daily_spark(spark, sf_dir)
     mx = daily.agg(F.max("d").alias("dmax"))
     wt = daily.crossJoin(F.broadcast(mx)).select(
         "x",

@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import _acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext120 import _acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import _erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
@@ -36,21 +37,6 @@ _Z_05 = -1.6448536269514726  # statistics.NormalDist().inv_cdf(0.05)
 # DuckDB parses the bare 17-digit literal as DECIMAL(17,16) and z*z*z
 # overflows decimal scale -- keep the SQL token double-typed
 _Z05D = f"CAST({_Z_05!r} AS DOUBLE)"
-
-# Abramowitz-Stegun 7.1.26 erf for x >= 0 (odd extension below), as a
-# text template over a double expression {x}
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
-
 
 _MOM_SQL = """
     daily AS (

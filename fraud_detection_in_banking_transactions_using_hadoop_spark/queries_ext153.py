@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import _erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext141 import _erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"

@@ -31,6 +31,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import (
+    _SQRT2,
+    _erf_sql,
+)
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
@@ -44,21 +48,6 @@ _LNK = tuple(math.log(k) for k in range(1, _KMAX + 1))
 _LNK_BAR = sum(_LNK) / _KMAX
 _LNK_SXX = sum((x - _LNK_BAR) ** 2 for x in _LNK)
 _HIG_C = tuple((x - _LNK_BAR) / _LNK_SXX for x in _LNK)
-_SQRT2 = 1.4142135623730951
-
-# A&S 7.1.26 erf (shared literal polynomial, |err| < 1.5e-7)
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
-
 
 # per-segment residual SS after linear detrend, shared double text over
 # exact integer segment moments (w, sy, suy, syy, su, suu)

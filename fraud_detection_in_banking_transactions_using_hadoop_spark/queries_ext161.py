@@ -44,12 +44,6 @@ _K_LID = 10
 _N_ANCH_LID = 50
 
 
-def _fold_dot(x, y):
-    return F.aggregate(
-        F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
-    )
-
-
 _D2_SQL = (
     "list_dot_product(a.v, a.v) + list_dot_product(b.v, b.v)"
     " - 2.0 * list_dot_product(a.v, b.v)"

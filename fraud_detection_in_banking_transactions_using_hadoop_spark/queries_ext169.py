@@ -29,24 +29,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import (
+    _SQRT2,
+    _erf_sql,
+)
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
-_SQRT2 = 1.4142135623730951
 _GQ_SPLIT = 25  # quantity <= 25 vs > 25
-
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
 
 
 _MOM_SQL = """

@@ -30,48 +30,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table, spread
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext147 import (
+    _MD5_HEX_SQL,
+    _md5_media,
+)
+from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
 _N_SQUARINGS = 5  # 2^5 = 32 > 25 nations: max-min closure converged
 
-
-def _md5_media(docs: DataFrame) -> DataFrame:
-    # codec work downstream (mapInPandas encode/decode) is the dominant
-    # per-row cost; fan the single-row-group scan out first so it runs
-    # at cluster width (readers.spread no-ops on already-parallel input)
-    docs = spread(docs)
-    d = F.col("doc_id").cast("string")
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.substring(
-            F.unhex(
-                F.concat(
-                    F.md5(F.concat(d, F.lit("a"))),
-                    F.md5(F.concat(d, F.lit("b"))),
-                    F.md5(F.concat(d, F.lit("c"))),
-                    F.md5(F.concat(d, F.lit("d"))),
-                )
-            ),
-            1,
-            60,
-        ).alias("content"),
-    )
-
-
-_MD5_HEX_SQL = """
-    h AS (
-      SELECT doc_id AS media_id,
-             md5(CAST(doc_id AS VARCHAR) || 'a')
-               || md5(CAST(doc_id AS VARCHAR) || 'b')
-               || md5(CAST(doc_id AS VARCHAR) || 'c')
-               || md5(CAST(doc_id AS VARCHAR) || 'd') AS hex
-      FROM documents),
-    b AS (
-      SELECT media_id, i,
-             ('0x' || substr(hex, i * 2 + 1, 2))::BIGINT AS v
-      FROM h, (SELECT unnest(range(0, 60)) AS i) idx)
-"""
 
 # mu-law encode+decode replay as pure integer SQL over int16 sample s
 _ULAW_MAG = (

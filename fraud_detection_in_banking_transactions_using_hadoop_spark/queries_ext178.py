@@ -23,43 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import _acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
 _T_025_23 = 2.0686576104190406  # t critical, alpha/2 = 0.025, df = 23
-
-_ACK_A = [-3.969683028665376e+01, 2.209460984245205e+02, -2.759285104469687e+02,
-          1.383577518672690e+02, -3.066479806614716e+01, 2.506628277459239e+00]
-_ACK_B = [-5.447609879822406e+01, 1.615858368580409e+02, -1.556989798598866e+02,
-          6.680131188771972e+01, -1.328068155288572e+01]
-_ACK_C = [-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e+00,
-          -2.549732539343734e+00, 4.374664141464968e+00, 2.938163982698783e+00]
-_ACK_D = [7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e+00,
-          3.754408661907416e+00]
-_P_LOW = 0.02425
-
-
-def _acklam_sql(p: str) -> str:
-    def horner(coeffs, x):
-        expr = f"{coeffs[0]!r}"
-        for co in coeffs[1:]:
-            expr = f"({expr} * {x} + {co!r})"
-        return expr
-
-    a, b, c, d = _ACK_A, _ACK_B, _ACK_C, _ACK_D
-    ql = f"sqrt(-2.0 * ln({p}))"
-    qh = f"sqrt(-2.0 * ln(1.0 - ({p})))"
-    qc = f"(({p}) - 0.5)"
-    rc = f"({qc} * {qc})"
-    low = f"({horner(c, ql)} / ({horner(d, ql)} * {ql} + 1.0))"
-    high = f"(-{horner(c, qh)} / ({horner(d, qh)} * {qh} + 1.0))"
-    cen = f"({horner(a, rc)} * {qc} / ({horner(b, rc)} * {rc} + 1.0))"
-    return (
-        f"CASE WHEN ({p}) < {_P_LOW!r} THEN {low} "
-        f"WHEN ({p}) > {1 - _P_LOW!r} THEN {high} "
-        f"ELSE {cen} END"
-    )
 
 
 @register(

@@ -38,10 +38,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import _PI
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext177 import _DAILY_SQL
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
-
-_PI = 3.141592653589793
 
 # --- Kalman local-level model literals (dollars^2 units) ---
 _KQ = 1.0e4   # state-noise variance per day
@@ -60,14 +60,6 @@ _LE0_DN = f"CAST({math.log(0.65)!r} AS DOUBLE)"
 _LE1_UP = f"CAST({math.log(0.65)!r} AS DOUBLE)"    # bull: P(up day)
 _LE1_DN = f"CAST({math.log(0.35)!r} AS DOUBLE)"
 _LP0 = f"CAST({math.log(0.5)!r} AS DOUBLE)"        # uniform initial
-
-_DAILY_SQL = """
-    daily AS (
-      SELECT o_orderdate AS d,
-             CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY o_orderdate)
-"""
 
 
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,11 +35,11 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import _PI
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
-_PI = 3.141592653589793
 _N_SEG = 8
 _BK_K = 20
 _BK_PLO, _BK_PHI = 20.0, 40.0

@@ -30,7 +30,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.multim
     ADPCM_STEPS,
 )
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext172 import (
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext147 import (
     _MD5_HEX_SQL,
     _md5_media,
 )

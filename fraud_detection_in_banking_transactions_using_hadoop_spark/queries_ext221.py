@@ -37,9 +37,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import _acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.fold import collect_nonempty
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext120 import _acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _ELO_K = 32.0

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.fold import collect_nonempty
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext172 import _MD5_HEX_SQL
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext147 import _MD5_HEX_SQL
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _TOUR_N = 64
@@ -306,7 +306,7 @@ def q_elias_gamma_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
         rice_pick_k,
         rice_zigzag,
     )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext172 import (
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext147 import (
         _md5_media,
     )
 

@@ -40,15 +40,12 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank i
     with_global_rank,
 )
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext137 import _e9
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
 _N_ROUNDS = 3
 _E9_SQL = "CAST(floor(({t}) * 1e9 + 0.5) AS HUGEINT)"
-
-
-def _e9(col: F.Column) -> F.Column:
-    return F.floor(col * 1e9 + 0.5).cast(_DEC)
 
 
 # Shared sigmoid text on the (v, y, c) spine x broadcast coefficients.

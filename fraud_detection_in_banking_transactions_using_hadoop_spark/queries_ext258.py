@@ -31,10 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext187 import (
-    _DAILY_SQL,
-    _V_DAYS,
-)
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext177 import _DAILY_SQL
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext187 import _V_DAYS
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 # the ext187 HMM in probability space (its literals are ln-space)

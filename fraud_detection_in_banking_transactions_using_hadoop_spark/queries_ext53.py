@@ -24,6 +24,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltext import _PI
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
@@ -34,7 +35,6 @@ _PERIODS = (7, 30, 11)  # weekly, monthly, non-harmonic control
 # ---------------------------------------------------------------------------
 # Goertzel power at fixed periods.
 # ---------------------------------------------------------------------------
-_PI = 3.141592653589793
 
 _POWER_SQL = "\nUNION ALL\n".join(
     f"""
@@ -200,6 +200,9 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
             hi = mid
         else:
             lo = mid + 1
+    # Python's lo // 2 floors, while SQL integer division (the oracle's
+    # //, Spark's DIV) truncates toward zero; the two agree only because
+    # daily cent sums, and so lo, are non-negative.
     return spark.range(1).select(
         F.lit(n_pairs).cast("bigint").alias("n_pairs"),
         F.lit(lo // 2).cast("bigint").alias("hl_cents"),

@@ -6,7 +6,8 @@ summary embedding the full-precision per-query map overflowed the window
 summary, which parses but carries NO per-query map, so PERF_r12/r13
 per_query came back empty and two rounds were judged per-query-blind.
 The final line is now built by bench._final_line -- it EMBEDS the wall
-map at the finest precision ladder that fits a 1950-char budget -- and
+map at the finest precision ladder that fits bench._FINAL_LINE_BUDGET
+(1990 chars) -- and
 this test pins that length against worst-plausible magnitudes so
 headline-set growth or a degraded host can never overflow the window
 again."""

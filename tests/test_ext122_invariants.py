@@ -8,9 +8,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext120 import _daily_spark
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext122 import (
     _EWM_R,
-    _daily,
     q_distance_correlation_daily,
     q_ewm_corr_daily,
     q_partial_correlation_daily,
@@ -18,7 +18,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext122 i
 
 
 def _series(spark, sf_dir):
-    rows = _daily(spark, sf_dir).collect()
+    rows = _daily_spark(spark, sf_dir).collect()
     rows.sort(key=lambda r: r["d"])
     x = np.array([r["x"] for r in rows], dtype=np.float64)
     y = np.array([r["y"] for r in rows], dtype=np.float64)

@@ -289,78 +289,6 @@ def test_fold_edge_cases():
     assert statuses == ["FRAUD"]
 
 
-def test_transform_with_state_matches_v1_backend(spark, tmp_path_factory):
-    """Both stateful backends (applyInPandasWithState and
-    transformWithStateInPandas) must produce identical output on the same
-    replay -- they share fold_events, so this pins the wiring.
-
-    The v2 backend is EXPERIMENTAL (COVERAGE.md): its runtime needs
-    google.protobuf, which this image lacks. In a capable environment the
-    test asserts full parity; here it asserts the DOCUMENTED failure mode
-    (anything else -- e.g. an API break in stateful_v2 itself -- still
-    fails the test), so the suite carries no perpetual skip."""
-    import importlib.util
-
-    try:  # find_spec imports the parent package, which may itself be absent
-        has_tws_runtime = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_tws_runtime = False
-
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.streaming.stateful_v2 import (
-        score_stream_stateful_v2,
-    )
-
-    base = tmp_path_factory.mktemp("twsv2")
-    stream_dir = base / "in"
-    stream_dir.mkdir()
-    events = [
-        _payload(1, 50, 200, "2024-01-11 10:00:00", pos_id=1),
-        _payload(1, 50, 200, "2024-01-11 11:00:00", pos_id=2),
-        _payload(2, 500, 100, "2024-01-01 12:00:00", pos_id=3),
-        _payload(1, 50, 100, "2024-01-11 11:30:00", pos_id=4),
-    ]
-    (stream_dir / "b1.json").write_text("\n".join(json.dumps(e) for e in events))
-
-    lookup = {1: (100.0, 500), 2: (100.0, 500)}
-    geo = {"100": NYC, "200": LA}
-
-    try:
-        stream = read_payload_file_stream(spark, str(stream_dir))
-        out = score_stream_stateful_v2(stream, lookup, geo)
-        q = out.writeStream.outputMode("append").format("memory").queryName("tws_v2").start()
-        try:
-            q.processAllAvailable()
-            v2 = {r.pos_id: r.status for r in spark.sql("SELECT * FROM tws_v2").collect()}
-        finally:
-            q.stop()
-    except Exception as e:
-        msg = str(e)
-        if has_tws_runtime:
-            raise
-        # no protobuf -> the call-time probe in stateful_v2 rejects the
-        # backend with ITS error, deterministically (anything else is a
-        # regression in the gate itself)
-        assert "google.protobuf" in msg and "EXPERIMENTAL" in msg, (
-            f"unexpected v2-backend failure mode: {msg[:300]}"
-        )
-        return
-
-    # v1 backend on the same batch
-    lookup_bc = spark.sparkContext.broadcast(lookup)
-    geo_bc = spark.sparkContext.broadcast(geo)
-    stream1 = read_payload_file_stream(spark, str(stream_dir))
-    out1 = score_stream_stateful(stream1, lookup_bc, geo_bc)
-    q1 = out1.writeStream.outputMode("append").format("memory").queryName("tws_v1").start()
-    try:
-        q1.processAllAvailable()
-        v1 = {r.pos_id: r.status for r in spark.sql("SELECT * FROM tws_v1").collect()}
-    finally:
-        q1.stop()
-
-    assert v2 == v1
-    assert v2[4] == "FRAUD"  # intra-batch read-your-writes held in v2 too
-
-
 def test_stateful_streaming_matches_fold_oracle(spark, tmp_path_factory, zip_geo):
     """applyInPandasWithState output == pure-Python fold, including state
     carried across micro-batches and intra-batch sequencing."""
