@@ -245,28 +245,45 @@ _PRECISION_LADDERS = [
 ]
 
 
-def _final_line(total: float, timings: dict[str, float], sf_val) -> str:
+def _final_line(
+    total: float,
+    timings: dict[str, float],
+    sf_val,
+    cpu_total: float,
+    load_start: float,
+) -> str:
     """Serialize the driver-contract final line: metric/value/unit/n +
-    the per-query wall map + sf, compact separators, at the finest
-    precision that fits _FINAL_LINE_BUDGET. Falls back to the scalar
-    summary (always parses) only if even whole-second precision cannot
-    fit -- which would take ~25 more headline queries than exist."""
+    the per-query wall map + the host-drift scalars cpu_total (whole
+    CPU-seconds) and loadavg_start (1 dp) + sf, compact separators, at
+    the finest precision that fits _FINAL_LINE_BUDGET. Map precision
+    outranks the scalars: each ladder is tried with them, then without
+    them, before the next coarser ladder, so the scalars never cost the
+    map a precision notch. They cost ~40 chars, which today's 77-query
+    map at realistic walls does not leave, so they print only for
+    shorter maps. Falls back to the scalar summary (always parses) only
+    if even whole-second precision cannot fit -- which would take ~25
+    more headline queries than exist."""
+    scalars = {"cpu_total": round(cpu_total), "loadavg_start": round(load_start, 1)}
     for ladder in _PRECISION_LADDERS:
-        line = json.dumps(
-            {
-                "metric": "headline_query_wall_clock",
-                "value": round(total, 2),
-                "unit": "sec",
-                "n": len(timings),
-                "queries": {k: ladder(v) for k, v in timings.items()},
-                "sf": sf_val,
-            },
-            separators=(",", ":"),
-        )
-        if len(line) <= _FINAL_LINE_BUDGET:
-            return line
+        for extra in (scalars, {}):
+            line = json.dumps(
+                {
+                    "metric": "headline_query_wall_clock",
+                    "value": round(total, 2),
+                    "unit": "sec",
+                    "n": len(timings),
+                    "queries": {k: ladder(v) for k, v in timings.items()},
+                    **extra,
+                    "sf": sf_val,
+                },
+                separators=(",", ":"),
+            )
+            if len(line) <= _FINAL_LINE_BUDGET:
+                return line
     return json.dumps(
-        _bounded_summary(total, len(timings), -1.0, -1.0, sf_val),
+        _bounded_summary(
+            total, len(timings), scalars["cpu_total"], scalars["loadavg_start"], sf_val
+        ),
         separators=(",", ":"),
     )
 
@@ -362,7 +379,7 @@ def main() -> None:
         json.dump(full, fh)
         fh.write("\n")
     print(json.dumps(full))
-    print(_final_line(total, timings, sf_val))
+    print(_final_line(total, timings, sf_val, full["cpu_total"], load_start))
 
 
 if __name__ == "__main__":

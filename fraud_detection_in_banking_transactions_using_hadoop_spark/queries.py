@@ -1,6 +1,15 @@
-"""Query registry: every implemented operator from SURVEY.md 2 expressed
-twice -- as a PySpark DataFrame program and as ANSI SQL for the DuckDB
-oracle -- over the driver's testdata tables.
+"""Query registry: every implemented operator from SURVEY.md 2 over the
+driver's testdata tables, each with ANSI SQL for the DuckDB oracle.
+
+Two registration forms:
+- `@register(name, sql)` on a PySpark DataFrame program: the query
+  exists twice, and the oracle compares two independent texts;
+- `q_x = register_sql(name, sql)` where Spark runs the oracle text
+  verbatim and matches DuckDB: the text IS the implementation (run via
+  `sql.sql`, which opens only the tables it names). Its oracle check
+  proves engine parity (rounding, NULLs, types, window semantics), not
+  the logic of the text. The paper core (lookup build, fraud rules,
+  streaming replays) keeps two independent texts.
 
 Mapping of the fraud domain onto the driver tables (FIXTURES.md 7):
 `orders` stands in for the card-transaction fact (card_id -> o_custkey,
@@ -24,6 +33,7 @@ import importlib
 import os
 import pkgutil
 import re
+import sys
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -40,6 +50,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.window
 )
 from fraud_detection_in_banking_transactions_using_hadoop_spark.plans.scoring import fraud_rules
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
+from fraud_detection_in_banking_transactions_using_hadoop_spark.sql import sql as run_sql
 
 
 @dataclass
@@ -68,6 +79,23 @@ def register(name: str, sql: Optional[str], tags: tuple[str, ...] = ()):
         return fn
 
     return deco
+
+
+def register_sql(
+    name: str, sql: str | Callable[[str], str], tags: tuple[str, ...] = ()
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Register a query whose implementation IS its oracle SQL text: `fn`
+    runs the resolved text through `sql.sql`, so Spark and DuckDB execute
+    the same statement. Returns `fn` for `q_x = register_sql(...)`.
+    `fn.__module__` is the registering module, like a decorated body's."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return run_sql(spark, sf_dir, resolve_sql(q, sf_dir))
+
+    fn.__module__ = sys._getframe(1).f_globals["__name__"]
+    q = Query(name, fn, sql, tags)
+    _REGISTRY.append(q)
+    return fn
 
 
 def _natural_key(name: str) -> list:
@@ -189,7 +217,7 @@ def q_latest_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # J1: dim |x| dim |x| dim broadcast joins (FDProcBatch.txt:259-267)
 # ---------------------------------------------------------------------------
-@register(
+q_member_score_join = register_sql(
     "member_score_join",
     """
     SELECT c_custkey AS member_id, c_name, c_acctbal AS score, n_name, r_name
@@ -199,21 +227,6 @@ def q_latest_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("J1",),
 )
-def q_member_score_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = read_table(spark, sf_dir, "customer")
-    nation = read_table(spark, sf_dir, "nation")
-    region = read_table(spark, sf_dir, "region")
-    return (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .select(
-            F.col("c_custkey").alias("member_id"),
-            "c_name",
-            F.col("c_acctbal").alias("score"),
-            "n_name",
-            "r_name",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -279,7 +292,7 @@ def q_lookup_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # J3 + F4: fact |x| dim join with CASE-derived status (README.md:251-280)
 # ---------------------------------------------------------------------------
-@register(
+q_fact_dim_case = register_sql(
     "fact_dim_case",
     """
     SELECT o_orderkey, o_custkey,
@@ -288,25 +301,12 @@ def q_lookup_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("J3", "F4"),
 )
-def q_fact_dim_case(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    customer = read_table(spark, sf_dir, "customer")
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.when(F.col("c_acctbal") < 1000, "FRAUDULENT")
-            .otherwise(F.col("o_orderstatus"))
-            .alias("status"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
 # P1/P2/S4: projection + filter, pushed down to the parquet scan
 # ---------------------------------------------------------------------------
-@register(
+q_filter_project = register_sql(
     "filter_project",
     """
     SELECT l_orderkey, l_linenumber, l_extendedprice
@@ -315,11 +315,6 @@ def q_fact_dim_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("P1", "P2", "S4"),
 )
-def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("2000-01-01")) & (F.col("l_returnflag") == "R")
-    ).select("l_orderkey", "l_linenumber", "l_extendedprice")
 
 
 # ---------------------------------------------------------------------------
@@ -585,7 +580,7 @@ def q_set_ops_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.union(b).distinct().subtract(c)
 
 
-@register(
+q_set_ops_intersect = register_sql(
     "set_ops_intersect",
     """
     SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -594,20 +589,12 @@ def q_set_ops_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("setop",),
 )
-def q_set_ops_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    a = customer.filter(F.col("c_mktsegment") == "BUILDING").select(
-        F.col("c_custkey").alias("k")
-    )
-    b = orders.filter(F.col("o_totalprice") > 300000).select(F.col("o_custkey").alias("k"))
-    return a.intersect(b)
 
 
 # ---------------------------------------------------------------------------
 # Global sort + limit (TakeOrderedAndProject -- no full sort at scale)
 # ---------------------------------------------------------------------------
-@register(
+q_global_topk = register_sql(
     "global_topk",
     """
     SELECT o_orderkey, o_totalprice
@@ -615,13 +602,6 @@ def q_set_ops_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("sort", "limit"),
 )
-def q_global_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    return (
-        orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .select("o_orderkey", "o_totalprice")
-        .limit(20)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -13,14 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
 # ---------------------------------------------------------------------------
 # Column profile: nulls / distinct / range per column, long form.
 # ---------------------------------------------------------------------------
-@register(
+q_dq_profile = register_sql(
     "dq_profile",
     """
     SELECT 'o_custkey' AS col,
@@ -42,35 +42,12 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
     """,
     tags=("dq", "profile", "A1"),
 )
-def q_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long-form column profile (null/distinct/range) for the numeric
-    order columns -- the pre-flight check of every ingestion job. One
-    aggregate per column over a single cached scan; count(DISTINCT x)
-    expands via Spark's standard two-phase expand-aggregate, keyed on
-    the value, so no column funnels through one task."""
-    orders = read_table(spark, sf_dir, "orders")
-
-    def profile(col: str) -> DataFrame:
-        c = F.col(col)
-        return orders.agg(
-            F.lit(col).alias("col"),
-            F.count("*").cast("bigint").alias("n"),
-            F.count(c).cast("bigint").alias("n_nonnull"),
-            F.countDistinct(c).cast("bigint").alias("n_distinct"),
-            F.round(F.min(c), 6).alias("min_v"),
-            F.round(F.max(c), 6).alias("max_v"),
-        )
-
-    out = profile("o_custkey")
-    for col in ("o_totalprice", "o_orderkey"):
-        out = out.unionByName(profile(col))
-    return out
 
 
 # ---------------------------------------------------------------------------
 # Referential integrity: orphan counts across the star schema.
 # ---------------------------------------------------------------------------
-@register(
+q_dq_referential = register_sql(
     "dq_referential",
     """
     SELECT 'orders->customer' AS fk,
@@ -91,32 +68,6 @@ def q_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("dq", "referential", "anti"),
 )
-def q_dq_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Foreign-key orphan counts via left-anti joins -- the integrity
-    gate between ingestion and consumption. Each anti-join shuffles on
-    the key being validated (dimension sides broadcast when small);
-    counts are map-side combined."""
-    orders = read_table(spark, sf_dir, "orders")
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    customer = read_table(spark, sf_dir, "customer")
-    part = read_table(spark, sf_dir, "part")
-
-    def check(name: str, fact: DataFrame, fk: str, dim: DataFrame, pk: str) -> DataFrame:
-        orphans = fact.join(
-            F.broadcast(dim.select(F.col(pk).alias(fk))), fk, "left_anti"
-        )
-        return orphans.agg(
-            F.lit(name).alias("fk"),
-            F.count("*").cast("bigint").alias("n_orphans"),
-        ).crossJoin(
-            F.broadcast(fact.agg(F.count("*").cast("bigint").alias("n_rows")))
-        )
-
-    return (
-        check("orders->customer", orders, "o_custkey", customer, "c_custkey")
-        .unionByName(check("lineitem->orders", lineitem, "l_orderkey", orders, "o_orderkey"))
-        .unionByName(check("lineitem->part", lineitem, "l_partkey", part, "p_partkey"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -186,7 +137,7 @@ def q_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GROUP BY (the materialized-view maintenance invariant, proven under
 # the driver's hash gate, not just pytest).
 # ---------------------------------------------------------------------------
-@register(
+q_incremental_agg_replay = register_sql(
     "incremental_agg_replay",
     """
     SELECT o_custkey,
@@ -199,31 +150,3 @@ def q_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("incremental", "A1", "materialized-view"),
 )
-def q_incremental_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slice orders into 3 disjoint batches (o_orderkey % 3), build
-    per-batch partials, fold them with merge_partials, finalize -- and
-    match the one-shot aggregate byte-for-byte. min/max/count/sum merge
-    exactly by their monoids; avg derives from the ROUNDED sum
-    (CLAUDE.md half-boundary rule). The HLL distinct component is
-    estimate-typed and stays out of the oracle (pytest-gated in
-    tests/test_incremental.py)."""
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
-        merge_partials,
-        partials_of,
-    )
-
-    orders = read_table(spark, sf_dir, "orders")
-    batches = [
-        orders.filter(F.col("o_orderkey") % 3 == i) for i in range(3)
-    ]
-    state = partials_of(batches[0], "o_custkey", "o_totalprice")
-    for b in batches[1:]:
-        state = merge_partials(state, partials_of(b, "o_custkey", "o_totalprice"), "o_custkey")
-    return state.select(
-        "o_custkey",
-        F.col("n"),
-        F.round("sum_v", 2).alias("total"),
-        F.round(F.round("sum_v", 2) / F.col("n"), 6).alias("avg_v"),
-        F.round("min_v", 2).alias("min_v"),
-        F.round("max_v", 2).alias("max_v"),
-    )

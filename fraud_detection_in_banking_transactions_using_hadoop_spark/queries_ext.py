@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.asof import asof_join_backward
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.dedup import simhash64
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import _FMT_D, _FMT_S, register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import _FMT_D, _FMT_S, register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table, spread
 
 
@@ -116,7 +116,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # ROLLUP grouping sets
 # ---------------------------------------------------------------------------
-@register(
+q_rollup_agg = register_sql(
     "rollup_agg",
     """
     SELECT l_returnflag, l_linestatus,
@@ -125,17 +125,12 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("rollup", "A1"),
 )
-def q_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"), F.count("*").alias("n")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Pivot (wide aggregation)
 # ---------------------------------------------------------------------------
-@register(
+q_pivot_agg = register_sql(
     "pivot_agg",
     """
     SELECT l_returnflag,
@@ -145,19 +140,12 @@ def q_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("pivot", "A1"),
 )
-def q_pivot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-    )
 
 
 # ---------------------------------------------------------------------------
 # Distinct aggregation (exact)
 # ---------------------------------------------------------------------------
-@register(
+q_distinct_counts = register_sql(
     "distinct_counts",
     """
     SELECT o_orderstatus,
@@ -168,13 +156,6 @@ def q_pivot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("A1", "distinct"),
 )
-def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderstatus").agg(
-        F.countDistinct("o_custkey").alias("n_cust"),
-        F.count("*").alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("total"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank i
     ntile_from_rank,
     with_global_rank,
 )
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -40,7 +40,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
 # Two-proportion z-test: does variant A (even user_id) convert to
 # purchase at a different rate than variant B?
 # ---------------------------------------------------------------------------
-@register(
+q_ab_test_proportions = register_sql(
     "ab_test_proportions",
     """
     WITH users AS (
@@ -72,41 +72,6 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
     """,
     tags=("stats", "ab-test", "A1"),
 )
-def q_ab_test_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pooled two-proportion z-test with user_id parity as the variant
-    assignment. Events collapse to per-user conversion flags, then to
-    two arm rows, then to one wide row (conditional max pivot); the
-    z statistic is a single double expression over four exact integers,
-    so both engines compute the identical value."""
-    ev = read_table(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") > 150), 1).otherwise(0)
-        ).alias("converted")
-    ).withColumn("variant", (F.col("user_id") % 2).cast("integer"))
-    arms = users.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("converted").cast("bigint").alias("x"),
-    )
-    wide = arms.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n"))).alias("n_a"),
-        F.max(F.when(F.col("variant") == 0, F.col("x"))).alias("x_a"),
-        F.max(F.when(F.col("variant") == 1, F.col("n"))).alias("n_b"),
-        F.max(F.when(F.col("variant") == 1, F.col("x"))).alias("x_b"),
-    )
-    p_a = F.col("x_a").cast("double") / F.col("n_a")
-    p_b = F.col("x_b").cast("double") / F.col("n_b")
-    p_pool = (F.col("x_a") + F.col("x_b")).cast("double") / (F.col("n_a") + F.col("n_b"))
-    se = F.sqrt(p_pool * (1 - p_pool) * (1.0 / F.col("n_a") + 1.0 / F.col("n_b")))
-    return wide.select(
-        "n_a",
-        "x_a",
-        "n_b",
-        "x_b",
-        F.round(p_a, 6).alias("p_a"),
-        F.round(p_b, 6).alias("p_b"),
-        F.round((p_a - p_b) / se, 6).alias("z_score"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank i
     ntile_from_rank,
     with_global_rank,
 )
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -129,7 +129,7 @@ def q_extremal_index_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Hausman contrast of OLS vs IV (Wald) effect estimates.
 # ---------------------------------------------------------------------------
-@register(
+q_hausman_ols_iv = register_sql(
     "hausman_ols_iv",
     """
     WITH base AS (
@@ -178,73 +178,6 @@ def q_extremal_index_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("econometrics", "specification", "exact-arith"),
 )
-def q_hausman_ols_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hausman specification contrast on iv_wald_estimate's design
-    (z = nation parity instrumenting discount -> return): H =
-    (b_IV - b_OLS)^2 / (V_IV - V_OLS), with V_IV = s^2 Czz/Czx^2 and
-    V_OLS = s^2/Cxx from exact binary-count moments (x^2 = x for 0/1
-    variables, so every moment is a count). A significant H says the
-    naive OLS effect is endogeneity-contaminated -- exactly the
-    doubt that justifies the IV at all."""
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_discount", "l_returnflag"
-    )
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cu = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    base = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(cu, o.o_custkey == cu.c_custkey)
-        .select(
-            (F.col("c_nationkey") % 2).alias("z"),
-            F.when(F.col("l_discount") >= 0.05, 1).otherwise(0).alias("x"),
-            F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
-        )
-    )
-    mom = base.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum("z").cast("bigint").alias("sz"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("z") * F.col("y")).cast("bigint").alias("szy"),
-        F.sum(F.col("z") * F.col("x")).cast("bigint").alias("szx"),
-    )
-    nd = F.col("n").cast(_DEC)
-    c2 = mom.select(
-        "n",
-        (nd * F.col("sxy") - F.col("sx").cast(_DEC) * F.col("sy")).cast("double").alias("cxy"),
-        (nd * F.col("sx") - F.col("sx").cast(_DEC) * F.col("sx")).cast("double").alias("cxx"),
-        (nd * F.col("szy") - F.col("sz").cast(_DEC) * F.col("sy")).cast("double").alias("czy"),
-        (nd * F.col("szx") - F.col("sz").cast(_DEC) * F.col("sx")).cast("double").alias("czx"),
-        (nd * F.col("sz") - F.col("sz").cast(_DEC) * F.col("sz")).cast("double").alias("czz"),
-        (nd * F.col("sy") - F.col("sy").cast(_DEC) * F.col("sy")).cast("double").alias("cyy"),
-    )
-    b_ols = F.col("cxy") / F.col("cxx")
-    b_iv = F.col("czy") / F.col("czx")
-    s2 = (F.col("cyy") / F.col("n") - b_ols * F.col("cxy") / F.col("n")) / (
-        F.col("n") - 2
-    )
-    est = c2.select(
-        "n",
-        b_ols.alias("b_ols"),
-        b_iv.alias("b_iv"),
-        s2.alias("s2_scaled"),
-        (F.col("cxx") / F.col("n")).alias("sxx_c"),
-        (F.col("czz") / F.col("n")).alias("szz_c"),
-        (F.col("czx") / F.col("n")).alias("szx_c"),
-    )
-    diff = F.col("b_iv") - F.col("b_ols")
-    h = diff * diff / (
-        F.col("s2_scaled") * F.col("szz_c") / (F.col("szx_c") * F.col("szx_c"))
-        - F.col("s2_scaled") / F.col("sxx_c")
-    )
-    return est.select(
-        F.col("n").alias("n_lines"),
-        (F.round("b_ols", 6) + 0.0).alias("beta_ols"),
-        (F.round("b_iv", 6) + 0.0).alias("beta_iv"),
-        (F.round(diff, 6) + 0.0).alias("difference"),
-        F.round(h, 4).alias("hausman_chi2"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -367,7 +367,7 @@ def q_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Weighted median unit price per return flag (weights = quantity),
 # via the cumulative-weight crossing on the distinct-value spine.
 # ---------------------------------------------------------------------------
-@register(
+q_weighted_median = register_sql(
     "weighted_median",
     """
     WITH units AS (
@@ -394,38 +394,3 @@ def q_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("robust", "weighted", "A1"),
 )
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantity-weighted median unit price per return flag: collapse to
-    the distinct unit-price spine (ties merge, so no accumulation-order
-    ambiguity), run one cumulative-weight window per flag, and take the
-    smallest value whose cumulative weight reaches half the total --
-    the textbook lower weighted median on exact integers. Both engines
-    share this formulation; the definition-level pytest re-derives it
-    with a literal python sweep."""
-    li = read_table(spark, sf_dir, "lineitem")
-    units = li.select(
-        F.col("l_returnflag").alias("rf"),
-        F.round(F.col("l_extendedprice") / F.col("l_quantity") * 100, 0)
-        .cast("bigint")
-        .alias("unit_cents"),
-        F.col("l_quantity").cast("bigint").alias("w"),
-    )
-    spine = units.groupBy("rf", "unit_cents").agg(F.sum("w").cast("bigint").alias("w"))
-    wc = Window.partitionBy("rf").orderBy("unit_cents")
-    cum = spine.select(
-        "rf",
-        "unit_cents",
-        "w",
-        F.sum("w").over(wc).alias("cw"),
-        F.sum("w").over(Window.partitionBy("rf")).alias("tw"),
-    )
-    return cum.groupBy("rf").agg(
-        F.min("tw").cast("bigint").alias("total_weight"),
-        F.round(
-            F.min(F.when(2 * F.col("cw") >= F.col("tw"), F.col("unit_cents"))).cast(
-                "double"
-            )
-            / 100.0,
-            2,
-        ).alias("weighted_median_price"),
-    )

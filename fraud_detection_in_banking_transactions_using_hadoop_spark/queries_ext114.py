@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -32,7 +32,7 @@ _Z2 = 3.8415  # z(97.5%)^2 to 4 decimals, shared constant
 # ---------------------------------------------------------------------------
 # Wilson lower-bound ranking of parts by non-return rate.
 # ---------------------------------------------------------------------------
-@register(
+q_wilson_lower_bound_ranking = register_sql(
     "wilson_lower_bound_ranking",
     f"""
     WITH per AS (
@@ -55,51 +55,6 @@ _Z2 = 3.8415  # z(97.5%)^2 to 4 decimals, shared constant
     """,
     tags=("ranking", "uncertainty", "exact-arith"),
 )
-def q_wilson_lower_bound_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 parts by the Wilson 95% LOWER bound of their keep
-    (non-return) rate, among parts with >= 20 lines: the bound
-    (p + z^2/2n - z sqrt(pq/n + z^2/4n^2)) / (1 + z^2/n) floors to an
-    e6 integer so the ranking is an exact sort (partkey tiebreak).
-    The uncertainty-aware sort that keeps small-sample flukes out of
-    'most reliable parts' lists -- wilson_score_ci for ONE rate,
-    weaponized as a ranking."""
-    li = read_table(spark, sf_dir, "lineitem")
-    per = (
-        li.groupBy(F.col("l_partkey").alias("pk"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("l_returnflag") != "R", 1).otherwise(0))
-            .cast("bigint")
-            .alias("k"),
-        )
-        .where(F.col("n") >= _WILSON_MIN_N)
-    )
-    p = F.col("k").cast("double") / F.col("n")
-    nd = F.col("n").cast("double")
-    lb = (
-        p
-        + _Z2 / (2.0 * F.col("n"))
-        - F.sqrt(F.lit(_Z2))
-        * F.sqrt(p * (1.0 - p) / F.col("n") + _Z2 / (4.0 * nd * F.col("n")))
-    ) / (1.0 + _Z2 / F.col("n"))
-    wl = per.select(
-        "pk",
-        "n",
-        "k",
-        F.floor(F.lit(1e6) * lb + 0.5).cast("bigint").alias("lb_e6"),
-    )
-    return (
-        wl.orderBy(F.col("lb_e6").desc(), "pk")
-        .limit(10)
-        .select(
-            F.col("pk").cast("bigint").alias("partkey"),
-            F.col("n").alias("n_lines"),
-            F.round(F.col("k").cast("double") / F.col("n"), 6).alias(
-                "raw_keep_rate"
-            ),
-            F.round(F.col("lb_e6") / 1e6, 6).alias("wilson_lower_bound"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _THRESH = 150000  # dollars: "predicted returned" = order total above this
@@ -33,7 +33,7 @@ _THRESH = 150000  # dollars: "predicted returned" = order total above this
 # Matthews correlation coefficient of the price-threshold return
 # predictor (same label join as decision_stump_split).
 # ---------------------------------------------------------------------------
-@register(
+q_matthews_corr = register_sql(
     "matthews_corr",
     f"""
     WITH lab AS (
@@ -61,47 +61,6 @@ _THRESH = 150000  # dollars: "predicted returned" = order total above this
     """,
     tags=("ml", "evaluation", "exact-arith"),
 )
-def q_matthews_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MCC of the naive "expensive orders get returned" predictor: the
-    chance-corrected binary agreement measure that stays honest under
-    class imbalance (accuracy and even balanced accuracy can look
-    fine while MCC ~ 0). Four exact cells from one pass; one sqrt
-    closes."""
-    li_r = (
-        read_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_returnflag") == "R")
-        .select("l_orderkey")
-        .distinct()
-    )
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    lab = o.join(li_r, o.o_orderkey == li_r.l_orderkey, "left").select(
-        F.when(F.col("o_totalprice") > _THRESH, 1).otherwise(0).alias("pred"),
-        F.when(F.col("l_orderkey").isNull(), 0).otherwise(1).alias("y"),
-    )
-
-    def cell(p, yy):
-        return F.sum(
-            F.when((F.col("pred") == p) & (F.col("y") == yy), 1).otherwise(0)
-        ).cast("bigint")
-
-    cells = lab.agg(
-        cell(1, 1).alias("tp"), cell(1, 0).alias("fp"),
-        cell(0, 1).alias("fn"), cell(0, 0).alias("tn"),
-    )
-    tp, fp, fn, tn = (F.col(c) for c in ("tp", "fp", "fn", "tn"))
-    tpd, fpd = tp.cast("double"), fp.cast("double")
-    return cells.select(
-        "tp", "fp", "fn", "tn",
-        F.round(
-            (tpd * tn - fpd * fn)
-            / F.sqrt((tp + fp).cast("double") * (tp + fn) * (tn + fp) * (tn + fn)),
-            6,
-        ).alias("mcc"),
-        F.round((tp + tn).cast("double") / (tp + fp + fn + tn), 6).alias("accuracy"),
-        F.round(
-            0.5 * (tpd / (tp + fn) + tn.cast("double") / (tn + fp)), 6
-        ).alias("balanced_accuracy"),
-    )
 
 
 # ---------------------------------------------------------------------------

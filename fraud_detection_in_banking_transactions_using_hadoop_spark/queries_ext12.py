@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -37,7 +37,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
 # Item-item collaborative-filtering similarity: cosine over order
 # co-occurrence vectors, top 50 pairs.
 # ---------------------------------------------------------------------------
-@register(
+q_item_cf_similarity = register_sql(
     "item_cf_similarity",
     """
     WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -58,44 +58,6 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
     """,
     tags=("recsys", "similarity", "J1"),
 )
-def q_item_cf_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-based CF: parts as binary order-membership vectors, cosine
-    = co-count / sqrt(count_a * count_b). The co-count join is bounded
-    by order size (same-order self-join, a.p < b.p dedupe), the item
-    counts broadcast back onto the filtered pair table, and the only
-    float is the final sqrt of exact integers. Top-50 with the full
-    unique tiebreak."""
-    li = read_table(spark, sf_dir, "lineitem")
-    op = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")).distinct()
-    a = op.alias("a")
-    b = op.alias("b")
-    pair = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("pa"), F.col("b.p").alias("pb"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c_ab"))
-        .where(F.col("c_ab") >= 3)
-    )
-    item = op.groupBy("p").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    ia = item.alias("ia")
-    ib = item.alias("ib")
-    return (
-        pair.join(F.broadcast(ia), F.col("pa") == F.col("ia.p"))
-        .join(F.broadcast(ib), F.col("pb") == F.col("ib.p"))
-        .select(
-            F.col("pa").cast("bigint").alias("part_a"),
-            F.col("pb").cast("bigint").alias("part_b"),
-            "c_ab",
-            F.col("ia.c").alias("n_a"),
-            F.col("ib.c").alias("n_b"),
-            F.round(
-                F.col("c_ab").cast("double")
-                / F.sqrt(F.col("ia.c").cast("double") * F.col("ib.c")),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "part_a", "part_b")
-        .limit(50)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -172,7 +134,7 @@ def q_cusum_drift_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sequential queue algorithm becomes an interval join on the
 # cumulative-quantity axis.
 # ---------------------------------------------------------------------------
-@register(
+q_fifo_lot_matching = register_sql(
     "fifo_lot_matching",
     """
     WITH supply AS (
@@ -208,54 +170,6 @@ def q_cusum_drift_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("fifo", "interval-join", "inventory"),
 )
-def q_fifo_lot_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FIFO allocation of return-flag-N supply lots to return-flag-R
-    demands per part WITHOUT a sequential scan: each side's cumulative
-    quantity turns row i into the half-open interval [cum-qty, cum) on
-    the allocation axis, and sequential FIFO matches lot s to demand d
-    exactly when the intervals overlap, with matched_qty = overlap
-    length. The join is equi on part plus two range predicates; windows
-    ride one part exchange per side. A pytest replays the literal
-    queue algorithm to prove the algebra."""
-    li = read_table(spark, sf_dir, "lineitem")
-
-    def side(flag):
-        w = Window.partitionBy("l_partkey").orderBy(
-            "l_shipdate", "l_quantity", F.col("l_orderkey") * 100 + F.col("l_linenumber")
-        )
-        return (
-            li.where(F.col("l_returnflag") == flag)
-            .select(
-                F.col("l_partkey").alias("part"),
-                F.col("l_quantity").cast("bigint").alias("qty"),
-                F.row_number().over(w).alias("rn"),
-                F.sum(F.col("l_quantity").cast("bigint")).over(w).alias("cum"),
-            )
-        )
-
-    s = side("N").alias("s")
-    d = side("R").alias("d")
-    return (
-        s.join(
-            d,
-            (F.col("s.part") == F.col("d.part"))
-            & (F.col("s.cum") - F.col("s.qty") < F.col("d.cum"))
-            & (F.col("d.cum") - F.col("d.qty") < F.col("s.cum")),
-        )
-        .select(
-            F.col("s.part").cast("bigint").alias("part"),
-            F.col("s.rn").cast("bigint").alias("supply_lot"),
-            F.col("d.rn").cast("bigint").alias("demand_seq"),
-            (
-                F.least(F.col("s.cum"), F.col("d.cum"))
-                - F.greatest(
-                    F.col("s.cum") - F.col("s.qty"), F.col("d.cum") - F.col("d.qty")
-                )
-            )
-            .cast("bigint")
-            .alias("matched_qty"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

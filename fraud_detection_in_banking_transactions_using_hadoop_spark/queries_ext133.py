@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -88,7 +88,7 @@ def q_somers_d_priority_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+q_goodman_kruskal_lambda = register_sql(
     "goodman_kruskal_lambda",
     """
     WITH cells AS (
@@ -110,36 +110,6 @@ def q_somers_d_priority_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("stats", "nominal", "association"),
 )
-def q_goodman_kruskal_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goodman-Kruskal lambda: how much better do you predict a
-    customer's SEGMENT knowing their NATION than guessing the modal
-    segment? lambda = (sum_x max_y n_xy - max_y n_y) / (n - max_y n_y)
-    -- the proportional-reduction-in-error measure for nominal pairs,
-    exact integers end to end. lambda ~ 0 here is the honest answer
-    (the partitions are independent), making the operator template the
-    point."""
-    cust = read_table(spark, sf_dir, "customer")
-    cells = cust.groupBy(
-        F.col("c_nationkey").alias("x"), F.col("c_mktsegment").alias("y")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    rowmax = cells.groupBy("x").agg(F.max("n").cast("bigint").alias("mx")).agg(
-        F.sum("mx").cast("bigint").alias("sum_rowmax")
-    )
-    colmax = cells.groupBy("y").agg(F.sum("n").cast("bigint").alias("cy")).agg(
-        F.max("cy").cast("bigint").alias("max_col")
-    )
-    nn = cells.agg(F.sum("n").cast("bigint").alias("n"))
-    j = nn.crossJoin(F.broadcast(rowmax)).crossJoin(F.broadcast(colmax))
-    return j.select(
-        "n",
-        "sum_rowmax",
-        "max_col",
-        F.round(
-            (F.col("sum_rowmax") - F.col("max_col")).cast("double")
-            / (F.col("n") - F.col("max_col")),
-            6,
-        ).alias("lambda_y_given_x"),
-    )
 
 
 @register(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -173,7 +173,7 @@ def q_relative_size_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+q_duplicate_amount_audit = register_sql(
     "duplicate_amount_audit",
     """
     WITH t AS (
@@ -194,36 +194,3 @@ def q_relative_size_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("fraud", "forensic", "duplicates"),
 )
-def q_duplicate_amount_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-payments screen: exact (customer, amount) collision
-    groups, how many orders they cover, and how many straddle multiple
-    days (same-amount same-day pairs are often legitimate splits;
-    cross-day repeats of an identical amount are the audit flag). One
-    hash exchange keyed on the (customer, cents) pair."""
-    orders = read_table(spark, sf_dir, "orders")
-    t = orders.select(
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
-        F.col("o_orderdate").cast("date").alias("d"),
-    )
-    dup = (
-        t.groupBy(F.col("o_custkey").alias("cust"), "cents")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.countDistinct("d").cast("bigint").alias("n_days"),
-        )
-        .where(F.col("n_orders") >= 2)
-    )
-    groups = dup.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_dup_groups"),
-        F.coalesce(F.sum("n_orders"), F.lit(0)).cast("bigint").alias("n_dup_orders"),
-        F.coalesce(
-            F.sum(F.when(F.col("n_days") > 1, 1).otherwise(0)), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("n_cross_day_groups"),
-    )
-    ntot = t.agg(F.count(F.lit(1)).cast("bigint").alias("n_orders_total"))
-    return groups.crossJoin(F.broadcast(ntot)).select(
-        "n_dup_groups", "n_dup_orders", "n_cross_day_groups", "n_orders_total"
-    )

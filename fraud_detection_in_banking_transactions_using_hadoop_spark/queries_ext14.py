@@ -31,7 +31,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank i
     ntile_from_rank,
     with_global_rank,
 )
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -161,7 +161,7 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mutual information between return flag and line status, with e12
 # integer term accumulation.
 # ---------------------------------------------------------------------------
-@register(
+q_mutual_information = register_sql(
     "mutual_information",
     """
     WITH cells AS (
@@ -191,39 +191,6 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("information", "mi", "exact-arith"),
 )
-def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MI(returnflag; linestatus) = sum p(a,b) ln(p(a,b)/(p(a)p(b))).
-    Cells and margins reuse the chi-square machinery; each cell's term
-    is one double expression of exact integers scaled to an e12
-    integer before summation, so the 6-term sum cannot drift between
-    engines. Zero cells never appear (GROUP BY only materializes
-    observed pairs), so ln is always finite."""
-    li = read_table(spark, sf_dir, "lineitem")
-    cells = li.groupBy(
-        F.col("l_returnflag").alias("rf"), F.col("l_linestatus").alias("ls")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    margins = cells.select(
-        "obs",
-        F.sum("obs").over(Window.partitionBy("rf")).alias("row_n"),
-        F.sum("obs").over(Window.partitionBy("ls")).alias("col_n"),
-        F.sum("obs").over(Window.partitionBy()).alias("n"),
-    )
-    term = F.round(
-        (F.col("obs").cast("double") / F.col("n"))
-        * F.log(
-            F.col("obs").cast("double")
-            * F.col("n")
-            / (F.col("row_n").cast("double") * F.col("col_n"))
-        )
-        * 1e12,
-        0,
-    ).cast("bigint")
-    terms = margins.select("n", term.alias("term_e12"))
-    return terms.agg(
-        F.max("n").cast("bigint").alias("n"),
-        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        F.round(F.sum("term_e12").cast("double") / 1e12, 6).alias("mi_nats"),
-    )
 
 
 # ---------------------------------------------------------------------------

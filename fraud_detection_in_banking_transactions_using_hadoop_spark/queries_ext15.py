@@ -23,14 +23,11 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import (
-    events_stream_schema,
-    read_table,
-)
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
+from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _P = 2147483647  # Mersenne prime 2^31-1, the CMS/bloom hash modulus
 
@@ -167,7 +164,7 @@ def q_streaming_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Odds ratio + relative risk of high-value purchase by variant, with
 # the log-OR confidence interval.
 # ---------------------------------------------------------------------------
-@register(
+q_odds_ratio_screen = register_sql(
     "odds_ratio_screen",
     """
     WITH users AS (
@@ -201,40 +198,6 @@ def q_streaming_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("stats", "odds-ratio", "A1"),
 )
-def q_odds_ratio_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2x2 effect sizes for the high-value-purchase outcome: odds
-    ratio, relative risk, and the Woolf log-OR 95% interval -- all one
-    closing expression over the four exact cell counts (one
-    conditional-aggregation pass; the same arms as ab_test_proportions
-    viewed through the epidemiology lenses)."""
-    ev = read_table(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") > 150), 1).otherwise(0)
-        ).alias("converted")
-    ).withColumn("variant", (F.col("user_id") % 2).cast("integer"))
-
-    def cell(v, c):
-        return F.sum(
-            F.when((F.col("variant") == v) & (F.col("converted") == c), 1).otherwise(0)
-        ).cast("bigint")
-
-    cells = users.agg(
-        cell(0, 1).alias("a"), cell(0, 0).alias("b"), cell(1, 1).alias("c"), cell(1, 0).alias("d")
-    )
-    a, b, c, d = (F.col(x).cast("double") for x in "abcd")
-    orr = (a / b) / (c / d)
-    se = F.sqrt(1.0 / a + 1.0 / b + 1.0 / c + 1.0 / d)
-    return cells.select(
-        "a",
-        "b",
-        "c",
-        "d",
-        F.round(orr, 6).alias("odds_ratio"),
-        F.round((a / (a + b)) / (c / (c + d)), 6).alias("relative_risk"),
-        F.round(F.exp(F.log(orr) - 1.959964 * se), 6).alias("or_ci_lo"),
-        F.round(F.exp(F.log(orr) + 1.959964 * se), 6).alias("or_ci_hi"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqltex
     _SQRT2,
     _erf_sql,
 )
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -40,7 +40,7 @@ _DAILY_SQL = """
 """
 
 
-@register(
+q_seasonal_mann_kendall = register_sql(
     "seasonal_mann_kendall",
     f"""
     WITH {_DAILY_SQL},
@@ -79,64 +79,6 @@ _DAILY_SQL = """
     """,
     tags=("timeseries", "trend", "seasonal"),
 )
-def q_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hirsch-Slack seasonal Mann-Kendall on daily revenue: the MK
-    S statistic is computed WITHIN each weekday (so Monday is only
-    ever compared to later Mondays) and pooled with Var = sum n_g
-    (n_g - 1)(2 n_g + 5)/18 -- the weekly cycle that inflates plain
-    mann_kendall_trend's discordant pairs cancels exactly. Daily
-    cents are effectively tie-free (the tie term is the CASE sgn = 0
-    which simply drops). Pair joins are per-weekday calendar-bounded;
-    continuity-corrected z through the shared erf."""
-    orders = read_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
-    )
-    s = daily.select("d", "cents", F.dayofweek("d").alias("dow"))
-    a = s.alias("a")
-    b = s.alias("b")
-    pairs = a.join(
-        b, (F.col("b.dow") == F.col("a.dow")) & (F.col("b.d") > F.col("a.d"))
-    ).select(
-        F.col("a.dow").alias("dow"),
-        F.when(F.col("b.cents") > F.col("a.cents"), 1)
-        .when(F.col("b.cents") < F.col("a.cents"), -1)
-        .otherwise(0)
-        .alias("sgn"),
-    )
-    per = pairs.groupBy("dow").agg(F.sum("sgn").cast("bigint").alias("s_g"))
-    sizes = s.groupBy(F.col("dow").alias("dw")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_g")
-    )
-    agg = per.join(sizes, F.col("dw") == F.col("dow")).agg(
-        F.sum("s_g").cast("bigint").alias("s_tot"),
-        F.sum(
-            F.col("n_g") * (F.col("n_g") - 1) * (2 * F.col("n_g") + 5)
-        )
-        .cast("bigint")
-        .alias("var18"),
-        F.count(F.lit(1)).cast("bigint").alias("n_seasons"),
-    )
-    cc = (
-        F.when(F.col("s_tot") > 0, 1.0)
-        .when(F.col("s_tot") < 0, -1.0)
-        .otherwise(0.0)
-    )
-    z = (F.col("s_tot").cast("double") - cc) / F.sqrt(
-        F.col("var18").cast("double") / 18.0
-    )
-    st = agg.select("s_tot", "var18", "n_seasons", z.alias("z"))
-    return st.select(
-        "n_seasons",
-        F.col("s_tot").alias("s_pooled"),
-        F.round(F.col("z"), 4).alias("z"),
-        F.round(
-            1.0 - F.expr(_erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
-        ).alias("p_two_sided"),
-        (F.abs(F.col("z")) > _Z95).alias("reject_5pct"),
-    )
 
 
 @register(

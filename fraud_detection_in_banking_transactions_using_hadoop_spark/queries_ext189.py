@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -155,7 +155,7 @@ def q_aml_pass_through(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+q_peeling_chain_lengths = register_sql(
     "peeling_chain_lengths",
     """
     WITH e AS (
@@ -190,51 +190,6 @@ def q_aml_pass_through(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("fraud", "aml", "sequence"),
 )
-def q_peeling_chain_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peeling-chain screen: per account, the longest run of strictly
-    DECREASING consecutive payment amounts (classic mule behavior --
-    one incoming lump peeled away in shrinking slices). Run lengths via
-    the break-sum trick on per-user partitioned windows; the first
-    event of each run carries the break, so a chain of k decreasing
-    steps reports length k+1. Top 10 accounts by longest chain."""
-    e = read_table(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    brk = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(F.col("cents") < F.lag("cents").over(w), 0)
-        .otherwise(1)
-        .alias("brk"),
-    )
-    grp = brk.select(
-        "user_id",
-        F.sum("brk")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("g"),
-    )
-    runs = grp.groupBy("user_id", "g").agg(
-        F.count(F.lit(1)).cast("bigint").alias("run_len")
-    )
-    per_user = runs.groupBy("user_id").agg(
-        F.max("run_len").cast("bigint").alias("max_peel_chain"),
-        F.sum(F.when(F.col("run_len") >= 4, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_chains_ge_4"),
-        F.sum("run_len").cast("bigint").alias("n_events"),
-    )
-    return (
-        per_user.select(
-            "user_id", "n_events", "max_peel_chain", "n_chains_ge_4"
-        )
-        .orderBy(F.col("max_peel_chain").desc(), "user_id")
-        .limit(10)
-    )
 
 
 @register(

@@ -26,14 +26,14 @@ velocity/structuring screens a fraud shop runs beside it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import (
     ntile_from_rank,
     with_global_rank,
 )
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -271,7 +271,7 @@ def q_threshold_sweep_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Transaction-velocity screen: max orders inside any trailing 30-day
 # window per customer.
 # ---------------------------------------------------------------------------
-@register(
+q_velocity_flags = register_sql(
     "velocity_flags",
     """
     WITH o AS (
@@ -290,32 +290,13 @@ def q_threshold_sweep_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("fraud", "velocity", "W4"),
 )
-def q_velocity_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burst detector: for each customer the densest trailing 30-day
-    order count (RANGE frame over integer epoch days -- all same-day
-    rows share every frame, so the count is tie-order independent),
-    flagged at >= 3. One exchange on the customer key; the window and
-    the final groupBy share it."""
-    orders = read_table(spark, sf_dir, "orders")
-    o = orders.select(
-        F.col("o_custkey").alias("cust"),
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
-        .cast("bigint")
-        .alias("ed"),
-    )
-    w = Window.partitionBy("cust").orderBy("ed").rangeBetween(-29, 0)
-    c30 = o.select("cust", F.count(F.lit(1)).over(w).alias("c30"))
-    return c30.groupBy("cust").agg(
-        F.max("c30").cast("bigint").alias("max_30d_txns"),
-        F.when(F.max("c30") >= 3, 1).otherwise(0).cast("integer").alias("flagged"),
-    ).select(F.col("cust").cast("bigint").alias("cust"), "max_30d_txns", "flagged")
 
 
 # ---------------------------------------------------------------------------
 # Structuring screen: order amounts just under the 10,000 reporting
 # threshold, per customer.
 # ---------------------------------------------------------------------------
-@register(
+q_structuring_near_threshold = register_sql(
     "structuring_near_threshold",
     """
     WITH s AS (
@@ -331,24 +312,3 @@ def q_velocity_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("fraud", "structuring", "A1"),
 )
-def q_structuring_near_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AML structuring heuristic: customers with orders in the
-    (9000, 10000] band just under the canonical reporting threshold --
-    one grouped aggregate with a conditional count, repeat offenders
-    (>= 2 near-threshold orders) flagged. Map-side combine does the
-    heavy lifting; output is only the customers with at least one hit."""
-    orders = read_table(spark, sf_dir, "orders")
-    near = (F.col("o_totalprice") > 9000) & (F.col("o_totalprice") <= 10000)
-    s = orders.groupBy(F.col("o_custkey").alias("cust")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.sum(F.when(near, 1).otherwise(0)).cast("bigint").alias("n_near"),
-    )
-    return s.where(F.col("n_near") >= 1).select(
-        F.col("cust").cast("bigint").alias("cust"),
-        "n_orders",
-        "n_near",
-        F.round(F.col("n_near").cast("double") / F.col("n_orders"), 6).alias(
-            "near_share"
-        ),
-        F.when(F.col("n_near") >= 2, 1).otherwise(0).cast("integer").alias("flagged"),
-    )

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -163,7 +163,7 @@ def q_lof_embedding_plane(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lof_chain_from_knn(knn)
 
 
-@register(
+q_aml_collusion_pairs = register_sql(
     "aml_collusion_pairs",
     """
     WITH pay AS (
@@ -192,74 +192,6 @@ def q_lof_embedding_plane(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("fraud", "aml", "collusion"),
 )
-def q_aml_collusion_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collusive-sender screen: customer pairs hitting >= 3 common
-    (supplier, week) payment cells, ranked by overlap and Jaccard of
-    their cell sets. The pair generation is an equi-self-join on the
-    cell key (never all-pairs across senders), so the work is bounded
-    by per-cell fan-in -- the natural shuffle key at 100 TB. The
-    sender-side companion of mule_fan_in (receiver view) and
-    aml_pass_through (middle view)."""
-    li = read_table(spark, sf_dir, "lineitem")
-    orders = read_table(spark, sf_dir, "orders")
-    pay = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("sender"),
-            F.col("l_suppkey").alias("recv"),
-            F.date_trunc("week", F.col("o_orderdate"))
-            .cast("date")
-            .alias("wk"),
-        )
-        .distinct()
-    )
-    a = pay.select(
-        F.col("sender").alias("s1"), "recv", "wk"
-    )
-    b = pay.select(
-        F.col("sender").alias("s2"), "recv", "wk"
-    )
-    pairs = (
-        a.join(b, ["recv", "wk"])
-        .where(F.col("s2") > F.col("s1"))
-        .groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
-        .where(F.col("n_common") >= 3)
-    )
-    deg = pay.groupBy("sender").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cells")
-    )
-    out = (
-        pairs.join(
-            deg.select(
-                F.col("sender").alias("s1"), F.col("n_cells").alias("s1_cells")
-            ),
-            "s1",
-        )
-        .join(
-            deg.select(
-                F.col("sender").alias("s2"), F.col("n_cells").alias("s2_cells")
-            ),
-            "s2",
-        )
-        .select(
-            "s1",
-            "s2",
-            "n_common",
-            "s1_cells",
-            "s2_cells",
-            F.round(
-                F.col("n_common").cast("double")
-                / (
-                    F.col("s1_cells") + F.col("s2_cells") - F.col("n_common")
-                ),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-    return out.orderBy(
-        F.col("n_common").desc(), F.col("jaccard").desc(), "s1", "s2"
-    ).limit(10)
 
 
 @register(

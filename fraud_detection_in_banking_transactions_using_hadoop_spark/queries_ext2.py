@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import _FMT_D, _FMT_S, register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -39,7 +39,7 @@ def q_left_join_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+q_semi_join = register_sql(
     "semi_join",
     """
     SELECT c_custkey, c_name FROM customer
@@ -48,12 +48,6 @@ def q_left_join_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "semi"),
 )
-def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = read_table(spark, sf_dir, "customer")
-    big = read_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    return customer.join(
-        big, customer.c_custkey == big.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name")
 
 
 @register(
@@ -112,7 +106,7 @@ def q_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Correlated scalar subquery -- via the SQL API (same Catalyst planning)
 # ---------------------------------------------------------------------------
-@register(
+q_scalar_subquery = register_sql(
     "scalar_subquery",
     """
     SELECT o_orderkey, o_custkey, o_totalprice
@@ -122,16 +116,6 @@ def q_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("subquery",),
 )
-def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_custkey, o_totalprice
-        FROM orders_sq o
-        WHERE o_totalprice > 2 * (SELECT avg(o2.o_totalprice) FROM orders_sq o2
-                                  WHERE o2.o_custkey = o.o_custkey)
-        """
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -262,7 +262,7 @@ def q_attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
 # revenue change into volume effect (dq * p0), price effect (dp * q0),
 # and the interaction term -- the standard FP&A waterfall.
 # ---------------------------------------------------------------------------
-@register(
+q_revenue_bridge_pvm = register_sql(
     "revenue_bridge_pvm",
     """
     WITH base AS (
@@ -300,57 +300,6 @@ def q_attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("finance", "bridge", "pivot"),
 )
-def q_revenue_bridge_pvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dRev = dq*p0 + dp*q0 + dq*dp per nation. Revenue is summed in
-    EXACT per-line-rounded cents (a float sum would differ by 1 ulp
-    between engines and flip a round(2) half boundary -- seen at
-    sf0.001), so every effect is one IEEE expression of exact bigints,
-    emitted as e2 integers. Plain grouped agg + 25-row pivot; every
-    join is an equi-join on dimension keys."""
-    li = read_table(spark, sf_dir, "lineitem")
-    o = read_table(spark, sf_dir, "orders")
-    c = read_table(spark, sf_dir, "customer")
-    n = read_table(spark, sf_dir, "nation")
-    base = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .where(F.year("o_orderdate").isin(1996, 1997))
-        .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("yr"))
-        .agg(
-            F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("qty"),
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
-                ).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("rev"),
-        )
-    )
-    piv = base.groupBy("nation").agg(
-        F.max(F.when(F.col("yr") == 1996, F.col("qty"))).alias("q0"),
-        F.max(F.when(F.col("yr") == 1996, F.col("rev"))).alias("r0"),
-        F.max(F.when(F.col("yr") == 1997, F.col("qty"))).alias("q1"),
-        F.max(F.when(F.col("yr") == 1997, F.col("rev"))).alias("r1"),
-    )
-    p0 = F.col("r0").cast("double") / F.col("q0")
-    p1 = F.col("r1").cast("double") / F.col("q1")
-    return piv.where(F.col("q0").isNotNull() & F.col("q1").isNotNull()).select(
-        "nation",
-        F.col("q0").cast("bigint").alias("q0"),
-        F.col("q1").cast("bigint").alias("q1"),
-        F.col("r0").cast("bigint").alias("r0_cents"),
-        F.col("r1").cast("bigint").alias("r1_cents"),
-        (F.col("r1") - F.col("r0")).cast("bigint").alias("delta_cents"),
-        F.round((F.col("q1") - F.col("q0")) * p0, 0)
-        .cast("bigint")
-        .alias("volume_effect_cents"),
-        F.round((p1 - p0) * F.col("q0"), 0).cast("bigint").alias("price_effect_cents"),
-        F.round((F.col("q1") - F.col("q0")) * (p1 - p0), 0)
-        .cast("bigint")
-        .alias("mix_effect_cents"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -358,7 +307,7 @@ def q_revenue_bridge_pvm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # endpoint degrees over the (symmetric) edge list. Positive => hubs
 # link to hubs; the single most-cited mixing statistic (Newman 2002).
 # ---------------------------------------------------------------------------
-@register(
+q_degree_assortativity = register_sql(
     "degree_assortativity",
     """
     WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -392,54 +341,6 @@ def q_revenue_bridge_pvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("graph", "assortativity"),
 )
-def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In the symmetric co-purchase edge list, deg(v) = #rows with
-    x=v = #rows with y=v, so endpoint degrees come from two PARTITIONED
-    windows over the edge table itself -- no degree-table self-join,
-    the edge lineage runs once. Moment sums are exact bigints (< 2^53,
-    so the one double expression is engine-identical); zero variance
-    propagates NULL explicitly."""
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") != F.col("b.p")))
-        .select(F.col("a.p").alias("x"), F.col("b.p").alias("y"))
-        .distinct()
-    )
-    deg = e.select(
-        "x",
-        F.count(F.lit(1)).over(Window.partitionBy("x")).alias("dx"),
-        F.count(F.lit(1)).over(Window.partitionBy("y")).alias("dy"),
-    )
-    s = deg.agg(
-        F.count(F.lit(1)).cast("bigint").alias("m"),
-        F.countDistinct("x").cast("bigint").alias("n_nodes"),
-        F.sum("dx").cast("bigint").alias("sx"),
-        F.sum("dy").cast("bigint").alias("sy"),
-        F.sum(F.col("dx") * F.col("dy")).cast("bigint").alias("sxy"),
-        F.sum(F.col("dx") * F.col("dx")).cast("bigint").alias("sxx"),
-        F.sum(F.col("dy") * F.col("dy")).cast("bigint").alias("syy"),
-    )
-    md, sxd, syd = (
-        F.col("m").cast("double"),
-        F.col("sx").cast("double"),
-        F.col("sy").cast("double"),
-    )
-    varx = md * F.col("sxx") - sxd * F.col("sx")
-    vary = md * F.col("syy") - syd * F.col("sy")
-    return s.select(
-        F.col("m").alias("n_edges"),
-        "n_nodes",
-        F.when(varx * vary <= 0, F.lit(None).cast("double"))
-        .otherwise(
-            F.round((md * F.col("sxy") - sxd * syd) / F.sqrt(varx * vary), 6)
-        )
-        .alias("assortativity"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _MIN_PTS = 6  # grid-DBSCAN density threshold per cell
@@ -302,7 +302,7 @@ def q_merge_upsert_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the heart of distributed distinct counting. PARTIAL oracle
 # (approx_aggs pattern): exact counts + bounded-error booleans.
 # ---------------------------------------------------------------------------
-@register(
+q_approx_distinct_union = register_sql(
     "approx_distinct_union",
     """
     SELECT o_orderpriority,
@@ -313,32 +313,6 @@ def q_merge_upsert_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("approx", "hll", "mergeable"),
 )
-def q_approx_distinct_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch per (priority, status) partition, hll_union_agg the
-    sketches up to priority, estimate, and assert the estimate lands
-    within 5%% of the exact count. Proves the merge path (sketches
-    built independently then combined) -- the property that makes the
-    count reaggregatable across 1000 executors and across days."""
-    orders = read_table(spark, sf_dir, "orders")
-    parts = orders.groupBy("o_orderpriority", "o_orderstatus").agg(
-        F.expr("hll_sketch_agg(o_custkey)").alias("sk"),
-    )
-    merged = parts.groupBy("o_orderpriority").agg(
-        F.expr("hll_sketch_estimate(hll_union_agg(sk))").alias("est"),
-        F.count(F.lit(1)).cast("bigint").alias("n_parts"),
-    )
-    exact = orders.groupBy("o_orderpriority").agg(
-        F.countDistinct("o_custkey").cast("bigint").alias("exact_cust")
-    )
-    return exact.join(merged, "o_orderpriority").select(
-        "o_orderpriority",
-        "exact_cust",
-        "n_parts",
-        (
-            F.abs(F.col("est") - F.col("exact_cust"))
-            <= 0.05 * F.col("exact_cust")
-        ).alias("union_est_ok"),
-    )
 
 
 # ---------------------------------------------------------------------------

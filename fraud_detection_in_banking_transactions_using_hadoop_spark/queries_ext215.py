@@ -15,10 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.similarity import cosine_fold
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext212 import grid_exact_knn
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
@@ -418,7 +417,7 @@ def q_clark_evans_nn_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+q_resource_allocation_linkpred = register_sql(
     "resource_allocation_linkpred",
     f"""
     WITH e AS (
@@ -442,53 +441,6 @@ def q_clark_evans_nn_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("graph", "link-prediction"),
 )
-def q_resource_allocation_linkpred(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Resource-allocation link predictor RA(p1,p2) = sum over shared
-    customers of 1/deg(c) -- the Zhou-Lu-Zhang refinement of
-    Adamic-Adar (1/deg punishes hubs harder than 1/ln deg; on
-    copurchase graphs it usually wins). Same e8-integer term
-    quantization, degree window, and persisted-edge-table contract as
-    `adamic_adar_linkpred` -- the two rankings are directly
-    comparable."""
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    deg = e.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    ec = (
-        e.join(deg.where(F.col("d").between(_RA_MIN_DEG, _RA_MAX_DEG)), "c")
-        .select(
-            "c",
-            "p",
-            F.round(F.lit(100000000.0) / F.col("d"), 0)
-            .cast("bigint")
-            .alias("ra"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    a, b = ec.alias("a"), ec.alias("b")
-    out = (
-        a.join(
-            b, (F.col("a.c") == F.col("b.c")) & (F.col("a.p") < F.col("b.p"))
-        )
-        .groupBy(F.col("a.p").alias("part_a"), F.col("b.p").alias("part_b"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_common"),
-            F.sum(F.col("a.ra")).cast("bigint").alias("ra_e8"),
-        )
-        .where(F.col("n_common") >= 2)
-        .orderBy(F.col("ra_e8").desc(), "part_a", "part_b")
-        .limit(100)
-    ).localCheckpoint(eager=True)
-    ec.unpersist()
-    return out
 
 
 @register(

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _RHO = 0.85  # engineered utilization for the priority-queue read
@@ -103,7 +103,7 @@ def q_luhn_card_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+q_hill_numbers_diversity = register_sql(
     "hill_numbers_diversity",
     """
     WITH pay AS (
@@ -132,60 +132,6 @@ def q_luhn_card_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("diversity", "ecology", "exact-arith"),
 )
-def q_hill_numbers_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill-number diversity profile of each nation's supplier mix:
-    q=0 richness (distinct suppliers), q=1 exp(Shannon) (effective
-    suppliers weighting by share), q=2 inverse Simpson (effective
-    suppliers weighting dominants). A steeply falling profile = spend
-    concentrated on few suppliers. Entropy terms quantize to e12
-    integers; Simpson is a pure integer ratio divided once."""
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    pay = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("nation"),
-            F.col("l_suppkey").alias("s"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    tot = pay.groupBy("nation").agg(
-        F.sum("c").cast("bigint").alias("t"),
-        F.count(F.lit(1)).cast("bigint").alias("q0"),
-        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("sc2"),
-    )
-    ent = (
-        pay.join(tot.select("nation", "t"), "nation")
-        .groupBy("nation")
-        .agg(
-            F.sum(
-                F.expr(
-                    "CAST(round(1.0e12 * CAST(c AS DOUBLE) / t"
-                    " * ln(CAST(t AS DOUBLE) / CAST(c AS DOUBLE)), 0)"
-                    " AS BIGINT)"
-                )
-            )
-            .cast("bigint")
-            .alias("sh_e12")
-        )
-    )
-    return tot.join(ent, "nation").select(
-        "nation",
-        F.col("q0").alias("hill_q0_richness"),
-        F.col("sh_e12").alias("shannon_e12"),
-        F.round(F.exp(F.col("sh_e12").cast("double") / 1e12), 6).alias(
-            "hill_q1"
-        ),
-        F.round(
-            F.col("t").cast("double") * F.col("t") / F.col("sc2"), 6
-        ).alias("hill_q2"),
-    )
 
 
 @register(

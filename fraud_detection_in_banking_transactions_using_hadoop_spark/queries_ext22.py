@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _N_MODELS = 16
@@ -294,7 +294,7 @@ def q_bh_fdr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # k-anonymity audit over (nation, market segment, balance bucket):
 # equivalence classes smaller than k are re-identification risks.
 # ---------------------------------------------------------------------------
-@register(
+q_k_anonymity_audit = register_sql(
     "k_anonymity_audit",
     """
     WITH classes AS (
@@ -314,27 +314,6 @@ def q_bh_fdr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("privacy", "k-anonymity", "governance"),
 )
-def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One shuffle on the quasi-identifier tuple; the audit summary is
-    a second (tiny) aggregate. k = 5; risky rows are the members of
-    under-k classes -- the release-blocking number."""
-    cust = read_table(spark, sf_dir, "customer")
-    classes = cust.groupBy(
-        F.col("c_nationkey").alias("nk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("bal_bucket"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("class_size"))
-    return classes.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_classes"),
-        F.min("class_size").cast("bigint").alias("min_class_size"),
-        F.sum(F.when(F.col("class_size") < 5, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_risky_classes"),
-        F.sum(F.when(F.col("class_size") < 5, F.col("class_size")).otherwise(0))
-        .cast("bigint")
-        .alias("n_risky_rows"),
-        F.sum("class_size").cast("bigint").alias("n_rows"),
-    )
 
 
 # ---------------------------------------------------------------------------

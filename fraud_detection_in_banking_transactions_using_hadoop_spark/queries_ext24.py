@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 # Shared DuckDB CTE: distinct word w-shingles per doc (w parameterized
@@ -255,7 +255,7 @@ _AA_MIN_DEG = 2
 _AA_MAX_DEG = 40
 
 
-@register(
+q_adamic_adar_linkpred = register_sql(
     "adamic_adar_linkpred",
     f"""
     WITH e AS (
@@ -279,48 +279,6 @@ _AA_MAX_DEG = 40
     """,
     tags=("graph", "link-prediction"),
 )
-def q_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AA(p1,p2) = sum over shared customers of 1/ln(deg(c)), each term
-    rounded to an e8 integer so the sums are exact cross-engine (the
-    kaplan_meier e8-int log-term pattern). Degree window [2, 40]
-    removes hubs BEFORE the self-join, bounding per-customer pair
-    fan-out to C(40,2); the weighted edge table feeds both sides, so
-    it is persisted (EAGER contract) and the top-100 is materialized
-    via localCheckpoint. Unique (part_a, part_b) tiebreak keeps the
-    LIMIT deterministic."""
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    deg = e.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    ec = (
-        e.join(deg.where(F.col("d").between(_AA_MIN_DEG, _AA_MAX_DEG)), "c")
-        .select(
-            "c",
-            "p",
-            F.round(F.lit(100000000.0) / F.log(F.col("d").cast("double")), 0)
-            .cast("bigint")
-            .alias("aa"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    a, b = ec.alias("a"), ec.alias("b")
-    out = (
-        a.join(b, (F.col("a.c") == F.col("b.c")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("part_a"), F.col("b.p").alias("part_b"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_common"),
-            F.sum(F.col("a.aa")).cast("bigint").alias("aa_e8"),
-        )
-        .where(F.col("n_common") >= 2)
-        .orderBy(F.col("aa_e8").desc(), "part_a", "part_b")
-        .limit(100)
-    ).localCheckpoint(eager=True)
-    ec.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------

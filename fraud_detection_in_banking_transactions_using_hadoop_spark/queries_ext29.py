@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
@@ -40,7 +40,7 @@ _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
 # ---------------------------------------------------------------------------
 # l-diversity audit over the k-anonymity equivalence classes.
 # ---------------------------------------------------------------------------
-@register(
+q_l_diversity_audit = register_sql(
     "l_diversity_audit",
     """
     WITH cells AS (
@@ -67,28 +67,6 @@ _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
     """,
     tags=("privacy", "l-diversity", "governance"),
 )
-def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per quasi-identifier class (nation, $1k balance band): distinct-l
-    and entropy-l of the sensitive market segment. One
-    (class, sensitive) groupBy, a class-partitioned window for class
-    totals, then a class rollup; each -p*ln(p) term is rounded to an
-    e9 integer BEFORE the cross-row sum, so both engines agree exactly
-    (the anova sum-order lesson)."""
-    cust = read_table(spark, sf_dir, "customer")
-    cells = cust.groupBy(
-        F.col("c_nationkey").alias("nk"),
-        F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("bal_bucket"),
-        F.col("c_mktsegment").alias("sens"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    w = Window.partitionBy("nk", "bal_bucket")
-    terms = cells.withColumn("class_n", F.sum("n").over(w).cast("bigint"))
-    p = F.col("n").cast("double") / F.col("class_n")
-    term_e9 = F.round(F.lit(-1000000000.0) * p * F.log(p), 0).cast("bigint")
-    return terms.groupBy("nk", "bal_bucket").agg(
-        F.max("class_n").cast("bigint").alias("class_size"),
-        F.count(F.lit(1)).cast("bigint").alias("l_distinct"),
-        F.sum(term_e9).cast("bigint").alias("entropy_e9"),
-    )
 
 
 # ---------------------------------------------------------------------------

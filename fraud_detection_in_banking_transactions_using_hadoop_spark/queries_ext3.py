@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import (
     convert_event_ts,
     event_ts_literal,
@@ -53,7 +53,7 @@ def q_unpivot_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # CUBE grouping sets (all 4 combinations)
 # ---------------------------------------------------------------------------
-@register(
+q_cube_agg = register_sql(
     "cube_agg",
     """
     SELECT o_orderstatus, o_orderpriority,
@@ -62,11 +62,6 @@ def q_unpivot_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("cube", "A1"),
 )
-def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    return orders.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total")
-    )
 
 
 # ---------------------------------------------------------------------------

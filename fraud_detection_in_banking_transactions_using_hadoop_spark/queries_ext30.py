@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
@@ -191,7 +191,7 @@ def _shapley_map() -> list[tuple[str, int, int, int]]:
 _MAP_SQL = ", ".join(f"('{c}', {s}, {si}, {w})" for c, s, si, w in _shapley_map())
 
 
-@register(
+q_shapley_attribution = register_sql(
     "shapley_attribution",
     f"""
     WITH u AS (
@@ -225,57 +225,6 @@ _MAP_SQL = ", ".join(f"('{c}', {s}, {si}, {w})" for c, s, si, w in _shapley_map(
     """,
     tags=("attribution", "shapley", "causal"),
 )
-def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Shapley over the 4 non-purchase exposure channels with
-    v(S) = empirical conversion rate of users whose exact exposure set
-    is S (v = 0 for unobserved sets). Users collapse to a 16-row
-    exact-set table; the 32-row constant subset map broadcasts; each
-    weighted marginal is an e9 integer so channel sums are exact. The
-    efficiency identity (sum phi = v(full) - v(empty)) is the pytest
-    invariant."""
-    ev = read_table(spark, sf_dir, "events")
-    chan_bit = (
-        F.when(F.col("event_type") == "view", 1)
-        .when(F.col("event_type") == "click", 2)
-        .when(F.col("event_type") == "signup", 4)
-        .when(F.col("event_type") == "error", 8)
-        .otherwise(0)
-    )
-    u = ev.groupBy("user_id").agg(
-        F.sum_distinct(chan_bit).cast("bigint").alias("mask"),
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") > 150), 1).otherwise(0)
-        ).alias("conv"),
-    )
-    sets = u.groupBy("mask").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("conv").cast("bigint").alias("k"),
-    )
-    m = spark.createDataFrame(
-        _shapley_map(), "ch string, s_mask long, si_mask long, wnum long"
-    )
-    vs = sets.select(F.col("mask").alias("s_mask"), (F.col("k").cast("double") / F.col("n")).alias("v_s"))
-    vi = sets.select(F.col("mask").alias("si_mask"), (F.col("k").cast("double") / F.col("n")).alias("v_si"))
-    terms = (
-        F.broadcast(m)
-        .join(vs, "s_mask", "left")
-        .join(vi, "si_mask", "left")
-        .select(
-            "ch",
-            F.round(
-                F.lit(1000000000.0)
-                * F.col("wnum")
-                * (F.coalesce(F.col("v_si"), F.lit(0.0)) - F.coalesce(F.col("v_s"), F.lit(0.0)))
-                / 24,
-                0,
-            )
-            .cast("bigint")
-            .alias("t_e9"),
-        )
-    )
-    return terms.groupBy(F.col("ch").alias("channel")).agg(
-        F.sum("t_e9").cast("bigint").alias("phi_e9")
-    )
 
 
 # ---------------------------------------------------------------------------

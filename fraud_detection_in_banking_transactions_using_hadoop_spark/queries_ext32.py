@@ -23,11 +23,11 @@ Scale notes (the 100 TB story per query):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -123,7 +123,7 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # G-test (log-likelihood ratio) of independence.
 # ---------------------------------------------------------------------------
-@register(
+q_g_test_independence = register_sql(
     "g_test_independence",
     """
     WITH obs AS (
@@ -149,40 +149,6 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("stats", "independence", "A1"),
 )
-def q_g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G = 2*sum O*ln(O/E) with E = row*col/N, each cell's term an e9
-    integer before the (order-free) sum. Zero cells never appear (a
-    grouped count is >= 1). Same contingency table as cramers_v /
-    chi2 -- the likelihood-ratio flavor auditors ask for."""
-    li = read_table(spark, sf_dir, "lineitem")
-    obs = li.groupBy(
-        F.col("l_returnflag").alias("r"), F.col("l_linestatus").alias("s")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("o"))
-    marg = obs.select(
-        "r",
-        "s",
-        "o",
-        F.sum("o").over(Window.partitionBy("r")).alias("row_t"),
-        F.sum("o").over(Window.partitionBy("s")).alias("col_t"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
-    term = F.round(
-        F.lit(2000000000.0)
-        * F.col("o")
-        * F.log(
-            F.col("o").cast("double")
-            * F.col("n")
-            / (F.col("row_t").cast("double") * F.col("col_t"))
-        ),
-        0,
-    ).cast("bigint")
-    return marg.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        ((F.countDistinct("r") - 1) * (F.countDistinct("s") - 1))
-        .cast("bigint")
-        .alias("dof"),
-        F.sum(term).cast("bigint").alias("g_e9"),
-    )
 
 
 # ---------------------------------------------------------------------------

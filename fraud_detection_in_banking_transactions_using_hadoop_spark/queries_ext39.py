@@ -26,14 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
 # ---------------------------------------------------------------------------
 # Diversity-constrained global top-k.
 # ---------------------------------------------------------------------------
-@register(
+q_diversified_topk = register_sql(
     "diversified_topk",
     """
     WITH rev AS (
@@ -54,28 +54,6 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
     """,
     tags=("topk", "diversity", "W2"),
 )
-def q_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 (part, supplier) revenue pairs with at most 2 entries per
-    supplier: per-supplier rank caps first (partitioned window), then
-    a deterministic ordered limit over the survivors. The cap
-    guarantees result diversity without rescanning."""
-    li = read_table(spark, sf_dir, "lineitem")
-    rev = li.groupBy(
-        F.col("l_partkey").alias("part"), F.col("l_suppkey").alias("supp")
-    ).agg(
-        F.sum(F.expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
-        .cast("bigint")
-        .alias("cents")
-    )
-    w = Window.partitionBy("supp").orderBy(F.col("cents").desc(), "part")
-    capped = rev.withColumn("supp_rank", F.row_number().over(w)).where(
-        F.col("supp_rank") <= 2
-    )
-    return (
-        capped.select("part", "supp", "cents", F.col("supp_rank").cast("bigint").alias("supp_rank"))
-        .orderBy(F.col("cents").desc(), "part")
-        .limit(20)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import (
     events_stream_schema,
     read_table,
@@ -61,7 +61,7 @@ def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Explicit GROUPING SETS with grouping() indicator
 # ---------------------------------------------------------------------------
-@register(
+q_grouping_sets = register_sql(
     "grouping_sets",
     """
     SELECT o_orderstatus, o_orderpriority,
@@ -74,19 +74,6 @@ def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("rollup", "A1"),
 )
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               CAST(grouping(o_orderstatus) AS INT) AS g_status,
-               CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-               count(*) AS n
-        FROM orders_gs
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
-                                (o_orderstatus, o_orderpriority))
-        """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -202,7 +189,7 @@ def q_range_join_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # first event). The sequential-dependency aggregation every product
 # analytics stack runs on its event stream.
 # ---------------------------------------------------------------------------
-@register(
+q_funnel_conversion = register_sql(
     "funnel_conversion",
     """
     WITH v AS (
@@ -224,39 +211,6 @@ def q_range_join_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("events", "funnel", "A1"),
 )
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three aggregation passes, all keyed on user_id -- each stage
-    joins the fact against the previous stage's (shrinking) per-user
-    min-timestamp table on the SAME key, so the user_id hash
-    partitioning is reused end-to-end and stage tables broadcast once
-    they shrink below the threshold. Strict `>` ordering makes the
-    result insensitive to same-timestamp reorderings across engines."""
-    events = read_table(spark, sf_dir, "events")
-
-    def stage(ev_type, prev):
-        e = events.filter(F.col("event_type") == ev_type)
-        if prev is None:
-            return e.groupBy("user_id").agg(F.min("ts").alias("t"))
-        return (
-            e.join(prev.withColumnRenamed("t", "_pt"), "user_id")
-            .filter(F.col("ts") > F.col("_pt"))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("t"))
-        )
-
-    v = stage("view", None)
-    c = stage("click", v)
-    p = stage("purchase", c)
-    counts = [
-        (1, "view", v), (2, "click", c), (3, "purchase", p),
-    ]
-    out = None
-    for no, name, df in counts:
-        row = df.agg(F.count("*").cast("bigint").alias("n_users")).select(
-            F.lit(no).alias("stage_no"), F.lit(name).alias("stage"), "n_users"
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -311,7 +265,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the shuffle layout. event_type is the engine's canonical skewed key
 # (5 values over the whole fact).
 # ---------------------------------------------------------------------------
-@register(
+q_skew_salted_counts = register_sql(
     "skew_salted_counts",
     """
     SELECT event_type, CAST(count(*) AS BIGINT) AS n
@@ -319,13 +273,3 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("skew", "A1"),
 )
-def q_skew_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Low-cardinality group key (5 event types across the whole fact =
-    the skew case AQE cannot help with, since aggregation skew isn't
-    join skew): the salted two-phase count spreads each hot key over
-    salt_factor partitions, and the oracle proves the salt is
-    result-invariant."""
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.skew import salted_group_count
-
-    events = read_table(spark, sf_dir, "events")
-    return salted_group_count(events, "event_type", salt_factor=8)

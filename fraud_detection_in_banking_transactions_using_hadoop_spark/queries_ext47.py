@@ -18,11 +18,11 @@ Scale notes (the 100 TB story per query):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
@@ -31,7 +31,7 @@ _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
 # ---------------------------------------------------------------------------
 # Negative-binomial MoM fit of per-user event counts.
 # ---------------------------------------------------------------------------
-@register(
+q_negbin_fit_mom = register_sql(
     "negbin_fit_mom",
     """
     WITH per AS (
@@ -67,34 +67,6 @@ _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
     """,
     tags=("stats", "count-model", "overdispersion"),
 )
-def q_negbin_fit_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NB method of moments on per-user event counts: m and v from
-    exact integer (n, sum, sum-sq), r = m^2/(v - m), p = m/v -- NULL
-    when the data isn't overdispersed (v <= m, where NB degenerates to
-    Poisson). Two aggregates, identical double expressions both
-    engines."""
-    ev = read_table(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("k"))
-    s = per.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("k").cast("bigint").alias("s1"),
-        F.sum(F.col("k") * F.col("k")).cast("bigint").alias("s2"),
-    )
-    m = F.col("s1").cast("double") / F.col("n")
-    v = F.col("s2").cast("double") / F.col("n") - m * m
-    degenerate = v <= m
-    return s.select(
-        "n",
-        F.col("s1").alias("total_events"),
-        F.round(m, 6).alias("mean_k"),
-        F.round(v, 6).alias("var_k"),
-        F.when(degenerate, F.lit(None).cast("double"))
-        .otherwise(F.round(m * m / (v - m), 6))
-        .alias("r_hat"),
-        F.when(degenerate, F.lit(None).cast("double"))
-        .otherwise(F.round(m / v, 6))
-        .alias("p_hat"),
-    )
 
 
 # ---------------------------------------------------------------------------

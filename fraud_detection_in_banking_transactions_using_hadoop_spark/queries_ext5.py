@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -253,29 +253,7 @@ def _zorder_locality_sql() -> str:
     """
 
 
-@register("zorder_locality", _zorder_locality_sql(), tags=("layout", "zorder"))
-def q_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group events by coarse z-cell (top 8 of 16 interleaved bits) and
-    report each cell's (x, y) bounding box: every cell spans at most a
-    16x16 rectangle of the 256x256 grid -- the file-level min/max
-    narrowing that makes a two-predicate scan skip ~sqrt of the files
-    instead of none. Pure expression + one aggregate; the write-side
-    twin (layout.write_zordered) range-partitions on the same key."""
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.layout import zorder_key
-
-    ev = read_table(spark, sf_dir, "events")
-    x = (F.col("user_id") % 256).cast("bigint")
-    y = (F.floor("value").cast("bigint") % 256).cast("bigint")
-    g = ev.select(
-        x.alias("x"), y.alias("y"), zorder_key(x, y, bits=8).alias("z")
-    )
-    return g.groupBy(F.shiftright("z", 8).cast("bigint").alias("z_cell")).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.min("x").cast("bigint").alias("x_min"),
-        F.max("x").cast("bigint").alias("x_max"),
-        F.min("y").cast("bigint").alias("y_min"),
-        F.max("y").cast("bigint").alias("y_max"),
-    )
+q_zorder_locality = register_sql("zorder_locality", _zorder_locality_sql(), tags=("layout", "zorder"))
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +264,7 @@ def q_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # price revision on orderkey % 7) -- fixture generation, same as
 # pii_redaction.
 # ---------------------------------------------------------------------------
-@register(
+q_snapshot_diff = register_sql(
     "snapshot_diff",
     """
     WITH old AS (
@@ -311,50 +289,6 @@ def q_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("cdc", "join"),
 )
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot reconciliation as one shuffle: both versions hash on the
-    key, FULL OUTER sort-merge/hash join, map-side classification, tiny
-    final aggregate. At 100 TB both sides bucket/cluster on the same key
-    so the join is co-located; per-row deltas floor-quantize to e4
-    INTEGERS before the sum (the r10 sf0.1 sweep caught the
-    rounded-double sum drifting 1e-4 across engine summation orders at
-    60k rows -- integer sums are order-free)."""
-    orders = read_table(spark, sf_dir, "orders")
-    old = orders.filter(F.col("o_orderdate") < "1999-01-01").select(
-        F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("v")
-    )
-    new = orders.filter(F.col("o_orderdate") >= "1996-01-01").select(
-        F.col("o_orderkey").alias("k"),
-        (
-            F.col("o_totalprice")
-            * F.when(F.col("o_orderkey") % 7 == 0, 1.1).otherwise(1.0)
-        ).alias("v"),
-    )
-    a = old.alias("a")
-    b = new.alias("b")
-    j = a.join(b, F.col("a.k") == F.col("b.k"), "full_outer")
-    change = (
-        F.when(F.col("a.k").isNull(), "added")
-        .when(F.col("b.k").isNull(), "removed")
-        .when(F.col("a.v") != F.col("b.v"), "changed")
-        .otherwise("unchanged")
-    )
-    delta_e4 = F.floor(
-        F.abs(
-            F.coalesce(F.col("b.v"), F.lit(0))
-            - F.coalesce(F.col("a.v"), F.lit(0))
-        )
-        * 10000
-        + 0.5
-    ).cast("bigint")
-    return (
-        j.select(change.alias("change_type"), delta_e4.alias("delta_e4"))
-        .groupBy("change_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            (F.sum("delta_e4").cast("double") / 1e4).alias("total_delta"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

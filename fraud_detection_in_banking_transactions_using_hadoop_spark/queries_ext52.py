@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _Z = 1.959964
@@ -34,7 +34,7 @@ _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
 # ---------------------------------------------------------------------------
 # Wilson score interval per event type.
 # ---------------------------------------------------------------------------
-@register(
+q_wilson_score_ci = register_sql(
     "wilson_score_ci",
     f"""
     WITH per AS (
@@ -60,31 +60,6 @@ _CENTS = "CAST(round(o_totalprice * 100, 0) AS BIGINT)"
     """,
     tags=("stats", "ci", "proportion"),
 )
-def q_wilson_score_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """95% Wilson interval for each event type's value>150 share:
-    center (p + z^2/2n)/(1 + z^2/n), half-width
-    z*sqrt(p(1-p)/n + z^2/4n^2)/(1 + z^2/n) -- one deterministic
-    double expression over exact integers, valid even at p near 0/1
-    where Wald breaks."""
-    ev = read_table(spark, sf_dir, "events")
-    per = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("value") > 150, 1).otherwise(0)).cast("bigint").alias("k"),
-    )
-    nd = F.col("n").cast("double")
-    p = F.col("k").cast("double") / nd
-    z2 = _Z * _Z
-    denom = 1 + z2 / nd
-    center = (p + z2 / (2 * nd)) / denom
-    half = _Z * F.sqrt(p * (1 - p) / nd + z2 / (4.0 * nd * nd)) / denom
-    return per.select(
-        "event_type",
-        "n",
-        "k",
-        F.round(p, 6).alias("p_hat"),
-        F.round(center - half, 6).alias("lo"),
-        F.round(center + half, 6).alias("hi"),
-    )
 
 
 # ---------------------------------------------------------------------------

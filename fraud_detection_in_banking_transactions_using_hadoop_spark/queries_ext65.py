@@ -24,20 +24,18 @@ Scale notes (the 100 TB story per query):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
-
-_DEC = "decimal(38,0)"
 
 
 # ---------------------------------------------------------------------------
 # Cochran-Mantel-Haenszel pooled odds ratio across nation strata.
 # ---------------------------------------------------------------------------
-@register(
+q_cmh_pooled_odds = register_sql(
     "cmh_pooled_odds",
     """
     WITH base AS (
@@ -78,85 +76,6 @@ _DEC = "decimal(38,0)"
     """,
     tags=("stats", "stratified", "exact-arith"),
 )
-def q_cmh_pooled_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Does a >=5% discount raise the return odds AFTER adjusting for
-    customer nation? CMH odds ratio = sum(a*d/n) / sum(b*c/n) over
-    nation strata, with each stratum's term an e9 integer (order-free
-    sums); the continuity-corrected CMH chi-square rides the same
-    cells. The 25-stratum aggregate is one grouped pass over the
-    3-table join."""
-    li = read_table(spark, sf_dir, "lineitem")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cst = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    base = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(cst), o.o_custkey == cst.c_custkey)
-        .select(
-            F.col("c_nationkey").alias("stratum"),
-            F.when(F.col("l_discount") >= 0.05, 1).otherwise(0).alias("exposed"),
-            F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("outcome"),
-        )
-    )
-    cells = base.groupBy("stratum").agg(
-        F.sum(F.col("exposed") * F.col("outcome")).cast("bigint").alias("a"),
-        F.sum(F.col("exposed") * (1 - F.col("outcome"))).cast("bigint").alias("b"),
-        F.sum((1 - F.col("exposed")) * F.col("outcome")).cast("bigint").alias("c"),
-        F.sum((1 - F.col("exposed")) * (1 - F.col("outcome"))).cast("bigint").alias("d"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    )
-    nd = F.col("n").cast("double")
-    terms = cells.where(F.col("n") > 1).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_strata"),
-        F.sum(
-            F.round(F.lit(1e9) * F.col("a").cast("double") * F.col("d") / nd, 0).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("num_e9"),
-        F.sum(
-            F.round(F.lit(1e9) * F.col("b").cast("double") * F.col("c") / nd, 0).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("den_e9"),
-        F.sum("a").cast("bigint").alias("sum_a"),
-        F.sum(
-            F.round(
-                F.lit(1e9) * (F.col("a") + F.col("b")).cast("double") * (F.col("a") + F.col("c")) / nd,
-                0,
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("e_e9"),
-        F.sum(
-            F.round(
-                F.lit(1e9)
-                * (
-                    (F.col("a") + F.col("b")).cast("double")
-                    * (F.col("c") + F.col("d"))
-                    * (F.col("a") + F.col("c"))
-                    * (F.col("b") + F.col("d"))
-                )
-                / (nd * nd * (nd - 1)),
-                0,
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("v_e9"),
-    )
-    chi2 = (
-        F.pow(
-            F.abs(F.col("sum_a").cast("double") - F.col("e_e9").cast("double") / 1e9)
-            - 0.5,
-            F.lit(2.0),
-        )
-        / (F.col("v_e9").cast("double") / 1e9)
-    )
-    return terms.select(
-        "n_strata",
-        F.round(F.col("num_e9").cast("double") / F.col("den_e9"), 6).alias(
-            "cmh_odds_ratio"
-        ),
-        F.round(chi2, 6).alias("cmh_chi2_cc"),
-    )
 
 
 # ---------------------------------------------------------------------------

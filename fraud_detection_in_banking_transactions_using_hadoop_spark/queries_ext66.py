@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -312,7 +312,7 @@ def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # A/B sample-size / power calculator from observed arm rates.
 # ---------------------------------------------------------------------------
-@register(
+q_ab_sample_size_power = register_sql(
     "ab_sample_size_power",
     f"""
     WITH users AS (
@@ -347,49 +347,3 @@ def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("stats", "ab-test", "planning"),
 )
-def q_ab_sample_size_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """How many users per arm would the observed effect need at
-    alpha=0.05 (two-sided) and 80% power? The standard two-proportion
-    formula with pooled-null and alternative variances; arm rates are
-    the exact integer counts of ab_test_proportions, z constants
-    spelled identically in both engines, NULL if the arms are exactly
-    tied (no effect to power)."""
-    ev = read_table(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 150), 1
-            ).otherwise(0)
-        ).alias("converted")
-    ).select((F.col("user_id") % 2).cast("int").alias("variant"), "converted")
-    arms = users.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("converted").cast("bigint").alias("x"),
-    )
-    wide = arms.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n"))).alias("n_a"),
-        F.max(F.when(F.col("variant") == 0, F.col("x"))).alias("x_a"),
-        F.max(F.when(F.col("variant") == 1, F.col("n"))).alias("n_b"),
-        F.max(F.when(F.col("variant") == 1, F.col("x"))).alias("x_b"),
-    )
-    p_a = F.col("x_a").cast("double") / F.col("n_a")
-    p_b = F.col("x_b").cast("double") / F.col("n_b")
-    pbar = (F.col("x_a") + F.col("x_b")).cast("double") / (F.col("n_a") + F.col("n_b"))
-    n_req = F.ceil(
-        F.pow(
-            F.lit(_Z_A) * F.sqrt(2 * pbar * (1 - pbar))
-            + F.lit(_Z_B) * F.sqrt(p_a * (1 - p_a) + p_b * (1 - p_b)),
-            F.lit(2.0),
-        )
-        / F.pow(p_a - p_b, F.lit(2.0))
-    )
-    return wide.select(
-        "n_a",
-        "x_a",
-        "n_b",
-        "x_b",
-        F.round(p_a, 6).alias("p_a"),
-        F.round(p_b, 6).alias("p_b"),
-        F.round(F.abs(p_a - p_b), 6).alias("observed_delta"),
-        F.when(p_a != p_b, n_req).cast("bigint").alias("n_per_arm_80pct"),
-    )

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -258,7 +258,7 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Spiegelhalter's Z calibration test.
 # ---------------------------------------------------------------------------
-@register(
+q_spiegelhalter_z = register_sql(
     "spiegelhalter_z",
     """
     WITH binned AS (
@@ -292,55 +292,3 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("ml", "calibration", "exact-arith"),
 )
-def q_spiegelhalter_z(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calibration-in-the-small on the ece_reliability split: with the
-    train-half rate p_b as the forecast per value band, Z sums
-    (y - p)(1 - 2p) over eval rows -- closed per band as
-    (k - n*p)(1-2p) -- over the root of sum n(1-2p)^2 p(1-p). Terms are
-    e9 integers per band (13 bands, order-free); |Z| > 2 flags
-    systematic miscalibration the ECE magnitude alone can't test."""
-    ev = read_table(spark, sf_dir, "events")
-    binned = ev.select(
-        F.least(F.floor(F.col("value") / 20.0).cast("bigint"), F.lit(12)).alias("bin"),
-        (F.col("event_id") % 2).cast("int").alias("half"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-    )
-    per = (
-        binned.groupBy("bin")
-        .agg(
-            F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).cast("bigint").alias("n_tr"),
-            F.sum(F.when(F.col("half") == 0, F.col("y")).otherwise(0)).cast("bigint").alias("k_tr"),
-            F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).cast("bigint").alias("n_ev"),
-            F.sum(F.when(F.col("half") == 1, F.col("y")).otherwise(0)).cast("bigint").alias("k_ev"),
-        )
-        .where((F.col("n_tr") > 0) & (F.col("n_ev") > 0))
-    )
-    p = F.col("k_tr").cast("double") / F.col("n_tr")
-    terms = per.select(
-        F.round(
-            F.lit(1e9)
-            * (F.col("k_ev") - F.col("n_ev").cast("double") * p)
-            * (1 - 2.0 * p),
-            0,
-        )
-        .cast("bigint")
-        .alias("num_e9"),
-        F.round(
-            F.lit(1e9) * F.col("n_ev") * F.pow(1 - 2.0 * p, F.lit(2.0)) * p * (1 - p),
-            0,
-        )
-        .cast("bigint")
-        .alias("den_e9"),
-    )
-    return terms.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_bins"),
-        (
-            F.round(
-                F.sum("num_e9").cast("double")
-                / 1e9
-                / F.sqrt(F.sum("den_e9").cast("double") / 1e9),
-                6,
-            )
-            + 0.0
-        ).alias("spiegelhalter_z"),
-    )

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -41,7 +41,7 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
 # Chi-square test of independence: is l_returnflag independent of
 # l_linestatus? Per-cell observed/expected + chi-square contribution.
 # ---------------------------------------------------------------------------
-@register(
+q_chi2_independence = register_sql(
     "chi2_independence",
     """
     WITH cells AS (
@@ -64,34 +64,6 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
     """,
     tags=("A1", "stats", "chi2"),
 )
-def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contingency-table independence screen. One aggregate collapses
-    the fact table to the cell grid; row/column margins and the grand
-    total are windows over those few cells (sum OVER () -- no scalar
-    subquery, no extra scan of the fact table). Expected counts and
-    chi-square terms are single double expressions of exact integers."""
-    li = read_table(spark, sf_dir, "lineitem")
-    cells = li.groupBy(
-        F.col("l_returnflag").alias("rf"), F.col("l_linestatus").alias("ls")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
-    margins = cells.select(
-        "rf",
-        "ls",
-        "obs",
-        F.sum("obs").over(Window.partitionBy("rf")).cast("bigint").alias("row_n"),
-        F.sum("obs").over(Window.partitionBy("ls")).cast("bigint").alias("col_n"),
-        F.sum("obs").over(Window.partitionBy()).cast("bigint").alias("n"),
-    )
-    expected = F.col("row_n").cast("double") * F.col("col_n") / F.col("n")
-    return margins.select(
-        "rf",
-        "ls",
-        "obs",
-        "row_n",
-        "col_n",
-        F.round(expected, 6).alias("expected"),
-        F.round(F.pow(F.col("obs") - expected, F.lit(2)) / expected, 6).alias("chi2_term"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +145,7 @@ def q_percentile_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Clamped (floor-at-zero) running balance: the sequential recurrence
 # b_t = max(0, b_{t-1} + x_t) rewritten as two stacked windows.
 # ---------------------------------------------------------------------------
-@register(
+q_clamped_running_balance = register_sql(
     "clamped_running_balance",
     """
     WITH flows AS (
@@ -197,34 +169,6 @@ def q_percentile_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("W4", "prefix-sum-rewrite", "exact-arith"),
 )
-def q_clamped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Floor-at-zero account balance per user (credits for
-    view/click/signup, debits for purchase/error, integer cents).
-    b_t = max(0, b_{t-1} + x_t) looks like an inherently sequential
-    stateful scan, but has the closed form
-    b_t = prefix_t - min(0, min_{s<=t} prefix_s), so it runs as a
-    prefix sum plus a running minimum -- two windows stacked on the
-    SAME user_id exchange, fully parallel (same trick family as
-    ewma_smoothing's rescaled prefix sum). Ordered by the ts-monotone
-    unique event_id key."""
-    ev = read_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    flows = ev.select(
-        "user_id",
-        "event_id",
-        F.when(F.col("event_type").isin("purchase", "error"), -cents)
-        .otherwise(cents)
-        .alias("cents"),
-    )
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    pre = flows.select("user_id", "event_id", F.sum("cents").over(w).alias("prefix"))
-    return pre.select(
-        F.col("user_id").cast("bigint").alias("user_id"),
-        F.col("event_id").cast("bigint").alias("event_id"),
-        (F.col("prefix") - F.least(F.lit(0), F.min("prefix").over(w)))
-        .cast("bigint")
-        .alias("balance_cents"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -35,7 +35,7 @@ _SG_M = 7  # 15-point window
 # ---------------------------------------------------------------------------
 # Newsvendor optimal order quantity for the top parts.
 # ---------------------------------------------------------------------------
-@register(
+q_newsvendor_quantile = register_sql(
     "newsvendor_quantile",
     f"""
     WITH dem AS (
@@ -63,50 +63,6 @@ _SG_M = 7  # 15-point window
     """,
     tags=("inventory", "quantile", "exact-arith"),
 )
-def q_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newsvendor order quantity for the five highest-volume parts:
-    q* = F^-1(cu/(cu+co)) at the 0.8 critical ratio, an EXACT order
-    statistic (first daily-demand value whose rank reaches 80% of the
-    part's demand-day count). The per-part window input is
-    calendar-bounded (demand days per part); ties share by the
-    rank-reach rule. Under linear over/underage costs no other
-    quantity beats this quantile -- the one-line proof of why
-    quantiles, not means, drive stocking."""
-    li = read_table(spark, sf_dir, "lineitem")
-    dem = li.groupBy(
-        F.col("l_partkey").alias("pk"), F.col("l_shipdate").alias("dt")
-    ).agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("q"))
-    topp = (
-        dem.groupBy("pk")
-        .agg(F.sum("q").alias("tq"))
-        .orderBy(F.col("tq").desc(), "pk")
-        .limit(_TOP_PARTS)
-        .select("pk")
-    )
-    sel = dem.join(F.broadcast(topp), "pk").select("pk", "q")
-    wp = Window.partitionBy("pk")
-    ranked = sel.select(
-        "pk",
-        "q",
-        F.row_number().over(wp.orderBy("q", "pk")).cast("bigint").alias("rn"),
-        F.count(F.lit(1)).over(wp).cast("bigint").alias("n"),
-        F.sum("q").over(wp).cast("bigint").alias("sq"),
-    )
-    return (
-        ranked.groupBy(F.col("pk").alias("partkey"))
-        .agg(
-            F.max("n").cast("bigint").alias("n_demand_days"),
-            F.round(F.max("sq").cast("double") / F.max("n"), 4).alias(
-                "mean_daily_units"
-            ),
-            F.min(
-                F.when(100 * F.col("rn") >= _NV_RATIO_PCT * F.col("n"), F.col("q"))
-            )
-            .cast("bigint")
-            .alias("q_star_units"),
-        )
-        .orderBy("partkey")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table, spread
 
 
@@ -78,7 +78,7 @@ def q_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mean of the target over the OTHER rows in its category -- the
 # standard leakage-free categorical feature.
 # ---------------------------------------------------------------------------
-@register(
+q_target_encoding = register_sql(
     "target_encoding",
     """
     WITH s AS (
@@ -92,26 +92,6 @@ def q_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("feature", "encoding"),
 )
-def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOO mean per category: one grouped (sum, count) -- a broadcast
-    dim of |categories| rows -- joined back map-side; each row's own
-    target is subtracted so the feature never leaks its label. The
-    group sum is round(4)ed BEFORE the subtraction/division (parallel
-    summation differs from the oracle's serial sum by ~1 ulp; rounding
-    first makes both engines divide identical numerators). n=1
-    categories encode as NULL rather than a divide-by-zero."""
-    orders = read_table(spark, sf_dir, "orders")
-    s = orders.groupBy("o_orderpriority").agg(
-        F.round(F.sum("o_totalprice"), 4).alias("sm"), F.count("*").alias("n")
-    )
-    loo = F.when(
-        F.col("n") > 1, (F.col("sm") - F.col("o_totalprice")) / (F.col("n") - 1)
-    )
-    return orders.join(F.broadcast(s), "o_orderpriority").select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.round(loo, 6).alias("prio_loo_mean"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -650,7 +630,7 @@ def q_multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rescaled terms u_i = coef_i * x_i / r^i with one final r^t multiply.
 # The canonical "recursive state as prefix-sum" trick.
 # ---------------------------------------------------------------------------
-@register(
+q_ewma_smoothing = register_sql(
     "ewma_smoothing",
     """
     WITH seq AS (
@@ -671,34 +651,6 @@ def q_multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("timeseries", "ewma"),
 )
-def q_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user EWMA (alpha=0.2) without recursion or a UDF: rescale
-    each value by r^-i, running-sum, multiply back by r^t -- a single
-    user_id exchange shared by the row_number and prefix-sum windows.
-    The rescaled terms span r^-n, so at ~1e4 rows per key the block
-    must be re-based (split the sequence and carry ewma across blocks);
-    here n<=~100 per user, well inside double range, and both engines
-    evaluate the identical sequential prefix sum."""
-    ev = read_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id", "event_id", "value", F.row_number().over(w).cast("int").alias("i")
-    )
-    r = F.lit(0.8)
-    u = F.when(F.col("i") == 1, F.col("value") / F.pow(r, 1)).otherwise(
-        0.2 * F.col("value") / F.pow(r, F.col("i"))
-    )
-    ws = (
-        Window.partitionBy("user_id")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return seq.select(
-        "user_id",
-        "event_id",
-        "i",
-        F.round(F.pow(r, F.col("i")) * F.sum(u).over(ws), 6).alias("ewma"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -724,16 +676,7 @@ _ANSI_DASHBOARD_SQL = """
 """
 
 
-@register("sql_entry_dashboard", _ANSI_DASHBOARD_SQL, tags=("sql", "catalog"))
-def q_sql_entry_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 nations by revenue per year, run as a raw SQL string
-    through fdbts.sql (temp views over read_table). The registered
-    oracle is the IDENTICAL string -- zero dialect drift -- and Catalyst
-    plans it exactly like the DataFrame twin (broadcast dims, pushed
-    scans), since temp views are metadata only."""
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.sql import sql as run_sql
-
-    return run_sql(spark, sf_dir, _ANSI_DASHBOARD_SQL)
+q_sql_entry_dashboard = register_sql("sql_entry_dashboard", _ANSI_DASHBOARD_SQL, tags=("sql", "catalog"))
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -119,7 +119,7 @@ def q_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+q_nullsafe_eq = register_sql(
     "nullsafe_eq",
     """
     WITH x AS (
@@ -136,12 +136,3 @@ def q_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("null", "semantics"),
 )
-def q_nullsafe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    s = F.when(F.col("o_orderstatus") == "P", None).otherwise(F.col("o_orderstatus"))
-    x = orders.select(s.alias("s"))
-    return x.agg(
-        F.count(F.when(F.col("s").eqNullSafe(F.lit(None)), 1)).alias("n_null"),
-        F.count(F.when(F.col("s").eqNullSafe("F"), 1)).alias("n_f"),
-        F.count(F.when(~F.col("s").eqNullSafe("F"), 1)).alias("n_not_f"),
-    )

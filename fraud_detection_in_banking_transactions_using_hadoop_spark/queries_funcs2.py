@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -138,7 +138,7 @@ def q_percentile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Fuzzy matching: levenshtein pairs inside a blocking key.
 # ---------------------------------------------------------------------------
-@register(
+q_fuzzy_name_match = register_sql(
     "fuzzy_name_match",
     """
     SELECT a.c_name AS name_a, b.c_name AS name_b,
@@ -149,30 +149,6 @@ def q_percentile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("functions", "fuzzy", "dedup", "brute-baseline"),
 )
-def q_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-identical customer names inside a nation block -- the
-    entity-resolution primitive, kept as the DOCUMENTED QUADRATIC
-    BASELINE: c_nationkey has fixed cardinality 25, so this join is
-    O(n^2/25) in block density (measured slope ~1.5 across
-    sf0.01->0.1). The registered scale twin is fuzzy_name_match_djoin
-    (queries_ext231.py): a delete-1-neighborhood equi-join, provably
-    complete for dist<=1, set-equal by pytest, slope 0.04. levenshtein
-    itself is a JVM builtin, no UDF."""
-    cust = read_table(spark, sf_dir, "customer").select("c_nationkey", "c_name")
-    a = cust.alias("a")
-    b = cust.select(
-        F.col("c_nationkey").alias("bn"), F.col("c_name").alias("b_name")
-    ).alias("b")
-    dist = F.levenshtein(F.col("c_name"), F.col("b_name"))
-    return (
-        a.join(b, (F.col("c_nationkey") == F.col("bn")) & (F.col("c_name") < F.col("b_name")))
-        .filter(dist <= 1)
-        .select(
-            F.col("c_name").alias("name_a"),
-            F.col("b_name").alias("name_b"),
-            dist.cast("int").alias("dist"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -210,7 +186,7 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Bitwise aggregates.
 # ---------------------------------------------------------------------------
-@register(
+q_bitwise_aggs = register_sql(
     "bitwise_aggs",
     """
     SELECT l_returnflag,
@@ -222,23 +198,12 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("functions", "bitwise", "A1"),
 )
-def q_bitwise_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bit_and/or/xor aggregates + a shifted sum -- the flag-mask
-    folding pattern. Algebraic, map-side combined."""
-    li = read_table(spark, sf_dir, "lineitem")
-    n = F.col("l_linenumber")
-    return li.groupBy("l_returnflag").agg(
-        F.bit_and(n).cast("bigint").alias("band"),
-        F.bit_or(n).cast("bigint").alias("bor"),
-        F.bit_xor(n).cast("bigint").alias("bxor"),
-        F.sum(F.shiftleft(n, 1)).cast("bigint").alias("sum_shifted"),
-    )
 
 
 # ---------------------------------------------------------------------------
 # FILTER-clause aggregation + argmax surface.
 # ---------------------------------------------------------------------------
-@register(
+q_filtered_aggs = register_sql(
     "filtered_aggs",
     """
     SELECT o_orderpriority,
@@ -252,21 +217,6 @@ def q_bitwise_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("functions", "filtered-agg", "A1"),
 )
-def q_filtered_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional aggregation without self-joins: FILTER-clause
-    equivalents (count_if / when-guarded sum), boolean folds, and
-    max_by/min_by keyed on the UNIQUE o_orderkey (argmax on a non-unique
-    measure is engine-arbitrary on ties -- the determinism trap)."""
-    orders = read_table(spark, sf_dir, "orders")
-    p = F.col("o_totalprice")
-    return orders.groupBy("o_orderpriority").agg(
-        F.count_if(p > 200000).cast("bigint").alias("n_big"),
-        F.round(F.sum(F.when(F.col("o_orderstatus") == "F", p)), 2).alias("sum_f"),
-        F.bool_and(p > 0).alias("all_positive"),
-        F.bool_or(p > 400000).alias("any_huge"),
-        F.max_by("o_custkey", "o_orderkey").cast("bigint").alias("last_custkey"),
-        F.min_by("o_custkey", "o_orderkey").cast("bigint").alias("first_custkey"),
-    )
 
 
 # ---------------------------------------------------------------------------

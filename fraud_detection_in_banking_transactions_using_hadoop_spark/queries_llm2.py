@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -101,7 +101,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Document length histogram (fixed-width buckets -- corpus shape profile)
 # ---------------------------------------------------------------------------
-@register(
+q_doc_length_histogram = register_sql(
     "doc_length_histogram",
     """
     SELECT CAST(floor(n_chars / 50) AS BIGINT) AS bucket,
@@ -113,18 +113,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("text", "histogram"),
 )
-def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    bucket = F.floor(F.col("n_chars") / 50)
-    return docs.groupBy(bucket.alias("bucket")).agg(
-        F.count("*").alias("n_docs"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-    ).select(
-        F.col("bucket").cast("long").alias("bucket"),
-        (F.col("bucket") * 50).cast("long").alias("bucket_lo"),
-        "n_docs",
-        "avg_chars",
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import _FMT_D, _FMT_S, register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import _FMT_D, _FMT_S, register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -53,7 +53,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------- Q4 shape --
-@register(
+q4_priority_check = register_sql(
     "q4_priority_check",
     """
     SELECT o_orderpriority, count(*) AS n
@@ -65,26 +65,10 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "semi", "A1"),
 )
-def q4_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-07-01"))
-        & (F.col("o_orderdate") < F.lit("1997-10-01"))
-    )
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    return (
-        orders.join(
-            lineitem,
-            (orders.o_orderkey == lineitem.l_orderkey)
-            & (lineitem.l_shipdate > orders.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n"))
-    )
 
 
 # --------------------------------------------------------------- Q6 shape --
-@register(
+q6_forecast_revenue = register_sql(
     "q6_forecast_revenue",
     """
     SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
@@ -95,24 +79,10 @@ def q4_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "P2", "A1"),
 )
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01"))
-            & (F.col("l_discount").between(0.02, 0.06))
-            & (F.col("l_quantity") < 10)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
-            F.count("*").alias("n"),
-        )
-    )
 
 
 # -------------------------------------------------------------- Q12 shape --
-@register(
+q12_priority_counts = register_sql(
     "q12_priority_counts",
     """
     SELECT l_linestatus,
@@ -126,23 +96,10 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "F4", "A1"),
 )
-def q12_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        .filter(F.col("l_shipdate") >= F.col("o_orderdate"))
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias("high_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).cast("bigint").alias("low_count"),
-        )
-    )
 
 
 # -------------------------------------------------------------- Q14 shape --
-@register(
+q14_promo_share = register_sql(
     "q14_promo_share",
     """
     SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
@@ -154,26 +111,10 @@ def q12_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "J3", "F4"),
 )
-def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = read_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-06-01"))
-        & (F.col("l_shipdate") < F.lit("1997-12-01"))
-    )
-    part = read_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-        .agg(
-            F.round(
-                100.0 * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0)) / F.sum(rev),
-                4,
-            ).alias("promo_pct")
-        )
-    )
 
 
 # -------------------------------------------------------------- Q16 shape --
-@register(
+q16_supplier_cnt = register_sql(
     "q16_supplier_cnt",
     """
     SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
@@ -183,20 +124,10 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "distinct", "A1"),
 )
-def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = read_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#13") & F.col("p_size").isin(1, 5, 9, 13)
-    )
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    return (
-        lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-        .groupBy("p_brand", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
 
 
 # -------------------------------------------------------------- Q18 shape --
-@register(
+q18_large_orders = register_sql(
     "q18_large_orders",
     """
     WITH big AS (
@@ -211,23 +142,3 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "having", "J2"),
 )
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    orders = read_table(spark, sf_dir, "orders")
-    customer = read_table(spark, sf_dir, "customer")
-    big = (
-        lineitem.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 300)
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("totalprice"),
-            F.round("total_qty", 2).alias("total_qty"),
-        )
-    )

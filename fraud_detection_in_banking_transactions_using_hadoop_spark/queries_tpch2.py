@@ -23,12 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
 # --------------------------------------------------------------- Q2 shape --
-@register(
+q2_min_cost_supplier = register_sql(
     "q2_min_cost_supplier",
     """
     WITH costs AS (
@@ -47,35 +47,6 @@ from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers 
     """,
     tags=("tpch", "correlated", "J2"),
 )
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    part = read_table(spark, sf_dir, "part").filter(F.col("p_size") <= 10)
-    supplier = read_table(spark, sf_dir, "supplier")
-    nation = read_table(spark, sf_dir, "nation")
-    region = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-
-    costs = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min("l_extendedprice").alias("cost")
-    )
-    best = costs.groupBy(F.col("l_partkey").alias("bp")).agg(
-        F.min("cost").alias("min_cost")
-    )
-    dim = (
-        supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .select("s_suppkey", "s_name", "n_name")
-    )
-    return (
-        costs.join(
-            best, (costs.l_partkey == best.bp) & (costs.cost == best.min_cost)
-        )
-        .join(F.broadcast(part), costs.l_partkey == part.p_partkey)
-        .join(F.broadcast(dim), costs.l_suppkey == F.col("s_suppkey"))
-        .select(
-            "p_partkey", "p_brand", "s_name", "n_name",
-            F.round("cost", 2).alias("cost"),
-        )
-    )
 
 
 # --------------------------------------------------------------- Q7 shape --
@@ -313,7 +284,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------------------------------------------------------- Q17 shape --
-@register(
+q17_small_qty_revenue = register_sql(
     "q17_small_qty_revenue",
     """
     SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
@@ -325,24 +296,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "correlated", "A1"),
 )
-def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    part = read_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
-    # the correlated scalar avg, decorrelated: per-part avg over ALL
-    # lineitems (not just Brand#13 rows), joined back
-    per_part = li.groupBy(F.col("l_partkey").alias("ap")).agg(
-        (F.avg("l_quantity") * 0.2).alias("qty_cap")
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(per_part, li.l_partkey == F.col("ap"))
-        .filter(F.col("l_quantity") < F.col("qty_cap"))
-        .agg(F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
-    )
 
 
 # -------------------------------------------------------------- Q19 shape --
-@register(
+q19_disjunctive_preds = register_sql(
     "q19_disjunctive_preds",
     """
     SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
@@ -357,40 +314,10 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "P2", "F4"),
 )
-def q19_disjunctive_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    part = read_table(spark, sf_dir, "part")
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#2")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#13")
-            & F.col("p_size").between(1, 25)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#4")
-            & F.col("p_size").between(1, 35)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .filter(cond)
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count("*").cast("bigint").alias("n"),
-        )
-    )
 
 
 # -------------------------------------------------------------- Q21 shape --
-@register(
+q21_latest_shipper = register_sql(
     "q21_latest_shipper",
     """
     SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
@@ -410,46 +337,10 @@ def q19_disjunctive_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "semi", "anti"),
 )
-def q21_latest_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    orders = read_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    supplier = read_table(spark, sf_dir, "supplier")
-
-    l1 = li.select("l_orderkey", "l_suppkey", "l_shipdate")
-    l2 = li.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2")
-    )
-    l3 = li.select(
-        F.col("l_orderkey").alias("o3"),
-        F.col("l_suppkey").alias("s3"),
-        F.col("l_shipdate").alias("d3"),
-    )
-    waiting = (
-        l1.join(orders, l1.l_orderkey == orders.o_orderkey)
-        .join(
-            l2,
-            (F.col("l_orderkey") == F.col("o2")) & (F.col("l_suppkey") != F.col("s2")),
-            "left_semi",
-        )
-        .join(
-            l3,
-            (F.col("l_orderkey") == F.col("o3"))
-            & (F.col("l_suppkey") != F.col("s3"))
-            & (F.col("d3") > F.col("l_shipdate")),
-            "left_anti",
-        )
-    )
-    return (
-        waiting.join(F.broadcast(supplier), F.col("l_suppkey") == supplier.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count("*").cast("bigint").alias("numwait"))
-        .orderBy(F.col("numwait").desc(), F.col("s_name").asc())
-        .limit(20)
-    )
 
 
 # -------------------------------------------------------------- Q22 shape --
-@register(
+q22_dormant_customers = register_sql(
     "q22_dormant_customers",
     """
     WITH avg_bal AS (
@@ -466,23 +357,3 @@ def q21_latest_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "anti", "scalar-subquery"),
 )
-def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    nation = read_table(spark, sf_dir, "nation")
-
-    avg_bal = customer.filter(F.col("c_acctbal") > 0.0).agg(
-        F.avg("c_acctbal").alias("_ab")
-    )
-    recent = orders.filter(F.col("o_orderdate") >= F.lit("1999-01-01"))
-    return (
-        customer.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("_ab"))
-        .join(recent, customer.c_custkey == recent.o_custkey, "left_anti")
-        .join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.count("*").cast("bigint").alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-    )

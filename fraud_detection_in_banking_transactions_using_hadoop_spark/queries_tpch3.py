@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register, register_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 
@@ -79,7 +79,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------------------------------------------------------- Q13 shape --
-@register(
+q13_order_distribution = register_sql(
     "q13_order_distribution",
     """
     WITH per_cust AS (
@@ -92,29 +92,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "J1", "A1"),
 )
-def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13: how many customers placed N orders (excluding a
-    priority class, the analog of the comment-pattern filter). The outer
-    join keeps order-less customers so c_count=0 appears in the
-    distribution -- the trap an inner join silently drops."""
-    cust = read_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = (
-        read_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") != "5-LOW")
-        .select("o_custkey", "o_orderkey")
-    )
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").cast("bigint").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(
-        F.count("*").cast("bigint").alias("custdist")
-    )
 
 
 # -------------------------------------------------------------- Q20 shape --
-@register(
+q20_part_promotion = register_sql(
     "q20_part_promotion",
     """
     WITH shipped AS (
@@ -134,37 +115,3 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("tpch", "semi", "correlated"),
 )
-def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20: suppliers holding an outsized share of a part family
-    (shipped > 1.5x the cross-supplier average for that part, standing
-    in for ps_availqty > 0.5*shipped). Nested aggregate feeding an IN
-    semi-join -- Catalyst plans the IN as LeftSemi, no subquery re-scan."""
-    li = read_table(spark, sf_dir, "lineitem")
-    part = (
-        read_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("small%"))
-        .select("p_partkey")
-    )
-    supplier = read_table(spark, sf_dir, "supplier")
-    nation = read_table(spark, sf_dir, "nation")
-
-    shipped = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-    )
-    thresholds = shipped.groupBy(F.col("l_partkey").alias("tp")).agg(
-        F.avg("qty").alias("avg_qty")
-    )
-    qualifying = (
-        shipped.join(thresholds, shipped.l_partkey == thresholds.tp)
-        .filter(F.col("qty") > 1.5 * F.col("avg_qty"))
-        .select("l_suppkey")
-    )
-    return (
-        supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(qualifying, supplier.s_suppkey == qualifying.l_suppkey, "left_semi")
-        .select("s_name", "n_name")
-        .distinct()
-        .orderBy("s_name", "n_name")
-    )

@@ -8,6 +8,7 @@ reference's single-mapper Sqoop job (README.md:79).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,7 +50,7 @@ _SPREAD_MIN_BYTES_PER_TASK = int(
 )
 
 
-def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Fan a narrow scan out across the cluster before CPU-heavy
     per-row work (md5 fan-outs, codec mapInPandas/Arrow stages).
 
@@ -77,7 +78,7 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     downstream is order-free (aggregates / exact-integer quantized
     sums per the build notes), so partitioning cannot change results.
     """
-    target = parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # Cheap no-op test: parquet effective scan parallelism is bounded by
     # the row-group count (byte-range splits that miss a row-group
     # midpoint read zero rows), and the driver testdata ships one row
@@ -104,22 +105,34 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     # compared to scan-sizing guidance (128 MB+/task) because these map
     # stages run codecs -- orders of magnitude more CPU per input byte
     # than a scan -- and it only engages on sub-(target*floor) inputs;
-    # at 100 TB the file-count no-op above fires first. Unknown sizes
-    # (non-local files, non-scan frames) keep the uncapped fan-out.
+    # at 100 TB the file-count no-op above fires first. The cap never
+    # goes below the scan's own file count: a capped target at or under
+    # it would only narrow the scan, so the frame is returned as is. Sizes
+    # come from the Hadoop FileSystem API, so the cap holds on hdfs://
+    # and s3a:// too; unknown sizes (non-scan frames, unreachable
+    # files) keep the uncapped fan-out.
     if files:
-        try:
-            import os as _os
-            from urllib.parse import urlparse as _urlparse
-
-            nbytes = sum(
-                _os.path.getsize(_urlparse(f).path) for f in files
-            )
-            target = min(
-                target, max(1, -(-nbytes // _SPREAD_MIN_BYTES_PER_TASK))
-            )
-        except OSError:
-            pass
+        nbytes = _input_bytes(df.sparkSession, files)
+        if nbytes is not None:
+            target = min(target, -(-nbytes // _SPREAD_MIN_BYTES_PER_TASK))
+            if target <= len(files):
+                return df
     return df.repartition(target)
+
+
+def _input_bytes(spark: SparkSession, files: list[str]) -> int | None:
+    """Total size of `files` through the Hadoop FileSystem API (any
+    scheme Spark can read), or None when a file cannot be stat'ed."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    try:
+        total = 0
+        for f in files:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            total += path.getFileSystem(conf).getFileStatus(path).getLen()
+        return total
+    except Py4JJavaError:
+        return None
 
 
 def events_stream_schema(spark: SparkSession, sf_dir: str) -> T.StructType:

@@ -3,6 +3,10 @@ the whole engine is drivable from plain `spark.sql(...)` -- the surface
 a Hive-runbook user (the reference's primary interface, FDProcBatch.txt)
 lands on first.
 
+`sql()` is also the implementation of every query registered with
+`queries.register_sql`: those queries run their oracle text here,
+verbatim, so Spark and the DuckDB oracle execute the same statement.
+
 Views go through `read_table`, so encoding normalization (nanos
 timestamps) and schema explicitness hold for SQL users too; Catalyst
 sees the same logical plans as the DataFrame API, so pushdown/pruning/
@@ -10,6 +14,8 @@ join strategies are identical.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,6 +51,12 @@ def open_catalog(
 
 
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
-    """One-shot: open the catalog and run a SQL string against it."""
-    open_catalog(spark, sf_dir)
+    """One-shot: register the tables `query` names as temp views and run
+    it. Only named tables are opened -- each `read_table` costs a parquet
+    footer read (~0.1 s), so opening all ten would dominate short
+    queries. The match is by whole word, so a column or alias that
+    shares a table's name only registers one view too many."""
+    for t in TABLES:
+        if re.search(rf"\b{t}\b", query, re.IGNORECASE):
+            read_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(query)

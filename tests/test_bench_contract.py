@@ -26,7 +26,7 @@ def test_final_line_fits_driver_window_worst_case():
     # (a 2-hour bench; every committed artifact's worst query is <7 s)
     # at the longest real sf label. The map must still reach the driver.
     timings = {name: 99.949 for name in HEADLINE}
-    line = _final_line(9999.99, timings, "0.001")
+    line = _final_line(9999.99, timings, "0.001", 99999.9, 128.123)
     assert len(line) <= _FINAL_LINE_BUDGET, len(line)
     assert _FINAL_LINE_BUDGET + 1 <= 2000  # line + newline inside the window
     parsed = json.loads(line)
@@ -37,11 +37,25 @@ def test_final_line_fits_driver_window_worst_case():
     assert parsed["sf"] == "0.001"
 
 
+def test_final_line_carries_host_drift_scalars_at_worst_case_magnitudes():
+    # cpu_total / loadavg_start separate host load from plan regressions,
+    # so they ride in the parsed final line whenever the map at its
+    # finest ladder leaves room: worst-plausible magnitudes (a 32-core
+    # host busy for a day, load 128) print rounded next to the full map.
+    timings = {name: float(1 + i % 9) for i, name in enumerate(HEADLINE)}
+    line = _final_line(sum(timings.values()), timings, "0.001", 99999.9, 128.123)
+    assert len(line) <= _FINAL_LINE_BUDGET, len(line)
+    parsed = json.loads(line)
+    assert parsed["queries"] == {k: int(v) for k, v in timings.items()}
+    assert parsed["cpu_total"] == 100000
+    assert parsed["loadavg_start"] == 128.1
+
+
 def test_final_line_absurd_magnitudes_fall_back_to_parse_safe_scalars():
     # Past any plausible magnitude the line must STILL parse (the r11
     # guarantee): the scalar fallback drops the map, never the parse.
     timings = {name: 99999.999 for name in HEADLINE}
-    line = _final_line(9999999.9, timings, 0.1)
+    line = _final_line(9999999.9, timings, 0.1, 99999.9, 128.123)
     assert len(line) < 1500, len(line)
     parsed = json.loads(line)
     assert parsed["metric"] == "headline_query_wall_clock"
@@ -51,9 +65,10 @@ def test_final_line_absurd_magnitudes_fall_back_to_parse_safe_scalars():
 def test_final_line_realistic_walls_keep_usable_precision():
     # Realistic magnitudes (every query 0.5-6 s, as in every committed
     # bench artifact) must keep at least the 1dp ladder: values within
-    # max(0.05 s, 5%) of truth.
+    # max(0.05 s, 5%) of truth. The host-drift scalars never buy their
+    # room with map precision.
     timings = {name: 0.567 if i % 2 else 5.678 for i, name in enumerate(HEADLINE)}
-    line = _final_line(sum(timings.values()), timings, 0.1)
+    line = _final_line(sum(timings.values()), timings, 0.1, 512.3, 3.42)
     assert len(line) <= _FINAL_LINE_BUDGET, len(line)
     parsed = json.loads(line)
     for name, v in parsed["queries"].items():

@@ -285,7 +285,6 @@ DOMAIN = {
     "average_precision": ("event_value_cents", "events_rows"),
     "review_capacity_capture": ("event_value_cents", "events_rows"),
     "mixture_schedule": ("doc_sources", "documents_rows"),
-    "g_test_independence": ("rf_ls_cells", "lineitem_rows"),
     "largest_remainder_allocation": ("cust_nations", "customer_rows"),
     "bh_fdr_screen": ("cust_nations", "customer_rows"),
     "by_fdr_dependent": ("cust_nations", "customer_rows"),
@@ -336,10 +335,6 @@ PROBES = {
         "SELECT count(DISTINCT (epoch_us(ts) // 60000000) % 1440) FROM events"
     ),
     "doc_sources": "SELECT count(DISTINCT source) FROM documents",
-    "rf_ls_cells": (
-        "SELECT count(*) FROM (SELECT DISTINCT l_returnflag, l_linestatus"
-        " FROM lineitem)"
-    ),
     "cust_nations": "SELECT count(DISTINCT c_nationkey) FROM customer",
     "orders_rows": "SELECT count(*) FROM orders",
     "lineitem_rows": "SELECT count(*) FROM lineitem",

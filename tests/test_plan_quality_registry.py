@@ -126,11 +126,9 @@ ALLOWED_NESTED_LOOP = {
     "qte_events_variant",
     # 1-row digit-total / order-total broadcasts (ext134 forensic trio)
     "benford_summation_test",
-    "duplicate_amount_audit",
     # constant 20-cell contingency pair join (ext133)
     "somers_d_priority_price",
     # 1-row marginal-total broadcasts (ext133)
-    "goodman_kruskal_lambda",
     "uncertainty_coefficient",
     # 1-row pooled-rate broadcast (Holm spine)
     "holm_bonferroni_screen",
@@ -169,8 +167,6 @@ ALLOWED_NESTED_LOOP = {
     "embedding_dup_pairs",
     "source_mixture",
     "q11_important_stock",
-    "q22_dormant_customers",
-    "dq_referential",
     "length_drift_ks",
     "bm25_hybrid_search",
     "lm_quality_score",
@@ -721,7 +717,6 @@ ALLOWED_GLOBAL_WINDOW = {
     "sign_test_weekly": "daily revenue series",
     "conformal_interval": "daily calibration series (order statistic)",
     "cramer_von_mises": "B-row bucket offsets (with_global_rank spine)",
-    "g_test_independence": "9-cell contingency table",
     "permutation_sign_test": "daily revenue series",
     "decision_stump_split": "bucket_bits offsets (cents DIV 2^16: <=1024-row bucket table)",
     "hill_tail_index": "101-row post-limit order statistics",
@@ -924,9 +919,6 @@ EAGER = {
     # reachability matrix)
     "elo_ratings_nations",
     "bowtie_decomposition",
-    # ext215: persisted weighted edge table + top-100 checkpoint (the
-    # adamic_adar contract)
-    "resource_allocation_linkpred",
     # ext212 grid twins: eager localCheckpoint of the cell-keyed point
     # spine (multi-referenced: probes/build/escalation tiers) and of
     # the exact-kNN union / md5-rank sample; the only non-equi joins
@@ -968,7 +960,6 @@ EAGER = {
     "lsh_recall_eval",
     # persist + localCheckpoint self-join contracts (ext24)
     "containment_dup_pairs",
-    "adamic_adar_linkpred",
     "hits_scores",
     # live streaming replay (foreachBatch histogram fold)
     "streaming_psi_monitor",

@@ -42,8 +42,20 @@ def test_spread_noop_when_scan_already_parallel(spark, sf_dir):
     # a frame whose inputFiles() already meet the target must be
     # returned UNTOUCHED (identity, no exchange).
     df = read_table(spark, sf_dir, "documents")
-    out = spread(df, parts=1)  # 1 file >= target 1
+    out = spread(df)  # 1 tiny file: the byte cap asks for 1 partition
     assert out is df
+
+
+def test_spread_cap_never_narrows_a_multi_file_scan(spark, tmp_path):
+    # Two tiny files under defaultParallelism >= 4: the byte cap asks for
+    # one partition, which would coalesce a scan that already has two.
+    # The cap must stop at the file count.
+    assert spark.sparkContext.defaultParallelism >= 4
+    path = str(tmp_path / "two_files")
+    spark.range(20).repartition(2).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 2
+    assert spread(df).rdd.getNumPartitions() >= 2
 
 
 def test_fused_ivfpq_index_matches_standalone_operators(spark, sf_dir):

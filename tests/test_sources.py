@@ -173,6 +173,21 @@ def test_sql_catalog_views(spark, sf_dir):
     assert row["t"].year >= 2024 and row["t2"] >= row["t"]
 
 
+def test_sql_registers_only_named_tables(spark, sf_dir):
+    """sql() opens only the tables its text names: each read_table costs
+    a parquet footer read, so registering all ten would dominate short
+    queries."""
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.sql import TABLES, sql
+
+    for t in TABLES:
+        spark.catalog.dropTempView(t)
+    n = sql(spark, sf_dir, "SELECT count(*) FROM orders").first()[0]
+    assert n > 0
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert "orders" in views
+    assert "lineitem" not in views
+
+
 def test_write_jdbc_roundtrip(spark, tmp_path):
     from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_jdbc_table
     from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.writers import write_jdbc
